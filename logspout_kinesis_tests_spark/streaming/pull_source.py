@@ -350,6 +350,13 @@ class _PullStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: ShardPartition) -> Iterator[tuple]:
+        # imported here, not at module level: this module is pickled by
+        # value, and a module-level name would travel with the class by
+        # reference, so every worker unpickling the source (the planner
+        # too, which never calls read) would have to import the package
+        from logspout_kinesis_tests_spark.session import skip_unchanged_zip_rereads
+
+        skip_unchanged_zip_rereads()
         # executor-side: re-create the client, then the reference's poll loop
         # (readstream.py:30-35) bounded to [start, end)
         client = make_client(partition.client_b64)

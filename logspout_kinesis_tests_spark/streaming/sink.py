@@ -9,8 +9,10 @@ docker_host (logspoutkinesis.go:74-172, :209).  Spark-first mapping:
                              partition (the AWS per-call cap; the
                              reference's BatchSize=10 is a flush trigger,
                              which the trigger interval already provides)
-- partition-key routing    → ``repartition(partition_key)`` so one key's
-                             records land in one task, in order (A16)
+- partition-key routing    → every record carries its key into
+                             PutRecords; each input partition is sent as
+                             it stands, with no shuffle and no ordering
+                             promise, since PutRecords gives none (A16)
 - bounded per-record retry → retry loop over the failed-record indices the
                              client reports (A17)
 - backpressure             → inherent: Spark pulls micro-batches; the
@@ -25,6 +27,7 @@ the same ``put_records`` contract.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -32,9 +35,9 @@ import uuid
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from logspout_kinesis_tests_spark.config import EngineConfig
+from logspout_kinesis_tests_spark.session import skip_unchanged_zip_rereads
 
 
 class FileRecordingClient:
@@ -59,8 +62,6 @@ class FileRecordingClient:
             os.makedirs(seen_dir, exist_ok=True)
             for i, (data, _key) in enumerate(records, start=1):
                 if i % self.fail_every == 0:
-                    import hashlib
-
                     marker = os.path.join(
                         seen_dir, hashlib.md5(data.encode()).hexdigest()
                     )
@@ -68,7 +69,8 @@ class FileRecordingClient:
                         with open(marker, "w") as f:
                             f.write("1")
                         failed.append(i - 1)
-        delivered = [r for i, r in enumerate(records) if i not in set(failed)]
+        failed_set = set(failed)
+        delivered = [r for i, r in enumerate(records) if i not in failed_set]
         if delivered:
             path = os.path.join(self.out_dir, f"put-{uuid.uuid4().hex}.json")
             with open(path, "w") as f:
@@ -155,6 +157,7 @@ def _send_partition(
 ) -> None:
     """Executor-side: group a partition's records into ≤cap PutRecords calls
     with bounded per-record retry (A15+A17)."""
+    skip_unchanged_zip_rereads()
     client = client_factory()
 
     def flush(buf: list[tuple[str, str]]) -> None:
@@ -183,22 +186,19 @@ def _send_partition(
 def make_batch_writer(
     client_factory: Callable[[], object], config: EngineConfig
 ) -> Callable[[DataFrame, int], None]:
-    """Build the ``foreachBatch`` function: key-partitioned, batched,
-    retrying sink (A15-A17).
+    """Build the ``foreachBatch`` function: keyed, batched, retrying sink
+    (A15-A17).
 
-    ``repartition(partition_key)`` hash-routes each key to exactly one task
-    — the Spark analogue of Kinesis's key→shard mapping, preserving per-key
-    order within the micro-batch (A16).  Partition count follows the
-    session's shuffle setting; at scale, AQE coalesces small batches.
+    Each input partition of the micro-batch is sent by its own task, as it
+    stands: one stage, no shuffle.  Every record carries its
+    ``partition_key`` (docker_host) into PutRecords, where Kinesis maps key
+    to shard (A16).  No ordering is promised: PutRecords gives none, and
+    the retry loop resends failed records after the ones that succeeded.
     """
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            df.select("value", "partition_key")
-            .repartition(F.col("partition_key"))
-            .foreachPartition(
-                lambda rows: _send_partition(rows, client_factory, config)
-            )
+        df.select("value", "partition_key").foreachPartition(
+            lambda rows: _send_partition(rows, client_factory, config)
         )
 
     return write_batch
