@@ -1,85 +1,9 @@
-from logspout_kinesis_tests_spark.operators.ann import ivf_index, ivf_topk
-from logspout_kinesis_tests_spark.operators.dedup import (
-    build_content_index,
-    connected_components,
-    dedup_keep_best,
-    dedup_keep_one,
-    embedding_neardup_pairs,
-    exact_dedup,
-    incremental_dedup,
-    line_dedup,
-    minhash_lsh_candidates,
-    minhash_near_duplicates,
-    ngram_jaccard_pairs,
-    simhash_near_duplicates,
-    substring_dedup,
-    winnowing_fingerprints,
-    winnowing_near_duplicates,
-    with_content_hash,
-    with_simhash64,
-    with_word_shingles,
-)
-from logspout_kinesis_tests_spark.operators.etl import (
-    docker_fields,
-    logstash_message,
-    parse_consumed,
-    quarantine_split,
-    serialize_json,
-)
-from logspout_kinesis_tests_spark.operators.multimodal import (
-    attach_text_payload,
-    extract_features,
-)
-from logspout_kinesis_tests_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_lsh,
-)
-from logspout_kinesis_tests_spark.operators.skew import salted_aggregate, salted_join
-from logspout_kinesis_tests_spark.operators.text_analysis import (
-    fingerprint,
-    language_id,
-    quality_score,
-    term_frequencies,
-    text_stats,
-    token_count,
-)
+"""Batch ``DataFrame -> DataFrame`` operators: the reference's ETL record
+transform (``etl``) and the LLM-data-pipeline operators (``dedup``, ``ann``,
+``similarity``, ``text_analysis``, ``multimodal``, ``curation`` and the
+rest).
 
-__all__ = [
-    "ivf_index",
-    "ivf_topk",
-    "build_content_index",
-    "connected_components",
-    "dedup_keep_best",
-    "dedup_keep_one",
-    "embedding_neardup_pairs",
-    "exact_dedup",
-    "incremental_dedup",
-    "line_dedup",
-    "minhash_lsh_candidates",
-    "minhash_near_duplicates",
-    "ngram_jaccard_pairs",
-    "simhash_near_duplicates",
-    "substring_dedup",
-    "winnowing_fingerprints",
-    "winnowing_near_duplicates",
-    "with_content_hash",
-    "with_simhash64",
-    "with_word_shingles",
-    "docker_fields",
-    "logstash_message",
-    "parse_consumed",
-    "quarantine_split",
-    "serialize_json",
-    "attach_text_payload",
-    "extract_features",
-    "cosine_topk",
-    "cosine_topk_lsh",
-    "salted_aggregate",
-    "salted_join",
-    "fingerprint",
-    "language_id",
-    "quality_score",
-    "term_frequencies",
-    "text_stats",
-    "token_count",
-]
+Import from the submodules.  This package re-exports nothing, so importing
+one operator module does not load the others (``multimodal`` pulls in
+pandas).
+"""

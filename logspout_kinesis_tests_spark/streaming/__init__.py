@@ -1,29 +1,10 @@
-from logspout_kinesis_tests_spark.streaming.batch_apply import (
-    apply_per_batch,
-    streaming_incremental_dedup,
-)
-from logspout_kinesis_tests_spark.streaming.joins import (
-    dedup_within_watermark,
-    stream_interval_join,
-)
-from logspout_kinesis_tests_spark.streaming.sink import (
-    FileRecordingClient,
-    make_batch_writer,
-)
-from logspout_kinesis_tests_spark.streaming.pipeline import (
-    attach_stats_listener,
-    console_pipeline,
-    produce_pipeline,
-)
+"""Structured Streaming core: the keyed, batched, retrying PutRecords sink
+(``sink``), the shard-parallel pull source (``pull_source``), the producer
+pipeline (``pipeline``), the epoch-indexed cross-batch flows
+(``batch_apply``), watermarked joins and dedup (``joins``, ``windowed``) and
+the stateful monitors (``stateful``).
 
-__all__ = [
-    "apply_per_batch",
-    "streaming_incremental_dedup",
-    "dedup_within_watermark",
-    "stream_interval_join",
-    "FileRecordingClient",
-    "make_batch_writer",
-    "attach_stats_listener",
-    "console_pipeline",
-    "produce_pipeline",
-]
+Import from the submodules.  This package re-exports nothing, so a Python
+worker that unpickles a sink or source function loads only that module's
+own imports.
+"""

@@ -8,14 +8,17 @@ both modes — no re-implementation, and batch/stream parity is testable
 
 Scope note: per-batch application gives per-micro-batch semantics.  That is
 correct for row-local operators (quality gates, scrubbing, scoring against a
-broadcast model) and for intra-batch dedup; CROSS-batch state (global dedup,
-corpus-wide models) belongs to the stateful path
-(``streaming/stateful.py::streaming_first_seen``) or to a periodic batch
-compaction — the standard lambda split at 100 TB stream scale.
+broadcast model) and for intra-batch dedup.  CROSS-batch state lives in an
+epoch-partitioned index beside the stream: each epoch reads the partitions
+committed before it and overwrites its own, so a replayed epoch is
+idempotent.  ``streaming_incremental_dedup`` is the exact cross-batch dedup
+on that index; the Bloom, MinHash, heavy-hitters and ANN flows share its
+``_index_before_epoch`` / ``compact_epoch_index`` machinery.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Callable
 
@@ -30,22 +33,33 @@ def _index_before_epoch(
     spark: SparkSession, index_dir: str, epoch_id: int, *cols: str
 ) -> DataFrame | None:
     """Read the epoch-partitioned dedup index, restricted to state committed
-    BEFORE ``epoch_id``; ``None`` when the index doesn't exist yet.
+    BEFORE ``epoch_id``; ``None`` when nothing has been committed yet.
 
     The ``epoch < epoch_id`` filter is the replay-safety core: foreachBatch
     epoch ids are stable across restarts, so a replayed batch never sees its
     own (possibly partial) index write — it re-derives from exactly the
     pre-batch state and its overwrite is idempotent.
+
+    "Nothing committed" means ``index_dir`` is missing or no ``epoch=*``
+    partition holds a data file (an aborted first write can leave an empty
+    one).  Every other read error propagates: answering "no index" for a
+    corrupt or unreadable index would pass every duplicate through.
     """
     from pyspark.sql import functions as F
 
-    try:
-        idx = spark.read.parquet(index_dir)
-    except Exception:
+    if not _has_epoch_data(index_dir):
         return None
-    if "epoch" not in idx.columns:  # pre-partitioned legacy index: trust it
-        return idx.select(*cols).distinct()
+    idx = spark.read.parquet(index_dir)
     return idx.filter(F.col("epoch") < epoch_id).select(*cols).distinct()
+
+
+def _has_epoch_data(index_dir: str) -> bool:
+    """True when an ``epoch=*`` partition of ``index_dir`` holds a file Spark
+    would read (it skips names starting ``_`` or ``.``; glob skips ``.``)."""
+    paths = glob.glob(os.path.join(glob.escape(index_dir), "epoch=*", "*"))
+    return any(
+        os.path.isfile(p) and not os.path.basename(p).startswith("_") for p in paths
+    )
 
 
 def apply_per_batch(
@@ -132,13 +146,20 @@ def streaming_incremental_dedup(
             index = (
                 with_content_hash(bdf.limit(0), text_col).select("content_sha256")
             )
-        survivors = incremental_dedup(bdf, index, id_col, text_col)
-        survivors.coalesce(1).write.mode("overwrite").json(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-        with_content_hash(survivors, text_col).select("content_sha256").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_dir, f"epoch={epoch_id}"))
+        # two writes read survivors: persist it so the index read, hash,
+        # anti-join and semi-join run once per epoch, not once per write
+        survivors = incremental_dedup(bdf, index, id_col, text_col).persist()
+        try:
+            survivors.coalesce(1).write.mode("overwrite").json(
+                os.path.join(out_dir, f"epoch={epoch_id}")
+            )
+            with_content_hash(survivors, text_col).select(
+                "content_sha256"
+            ).write.mode("overwrite").parquet(
+                os.path.join(index_dir, f"epoch={epoch_id}")
+            )
+        finally:
+            survivors.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_sink)

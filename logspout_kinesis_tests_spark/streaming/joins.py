@@ -63,9 +63,10 @@ def dedup_within_watermark(
     behind the watermark); the per-key state is then evicted.
 
     This is the production middle ground between per-batch
-    ``dropDuplicates`` (no cross-batch memory) and
-    ``streaming_first_seen`` (exact but unbounded state): re-crawled /
-    re-delivered records cluster in time, so a watermark-sized window
-    catches them while state stays O(keys-per-window) at any corpus size.
+    ``dropDuplicates`` (no cross-batch memory) and the epoch-partitioned
+    index of ``batch_apply.streaming_incremental_dedup`` (exact, but the
+    index grows with the distinct-record count): re-crawled / re-delivered
+    records cluster in time, so a watermark-sized window catches them while
+    state stays O(keys-per-window) at any corpus size.
     """
     return stream.withWatermark(ts_col, max_delay).dropDuplicatesWithinWatermark(keys)

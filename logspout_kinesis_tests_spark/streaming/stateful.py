@@ -1,15 +1,16 @@
 """Custom stateful streaming operators — ``applyInPandasWithState``.
 
-The reference keeps no stream state (SURVEY.md §2 Part B); these exist for
-the north-star pipeline surface: cross-batch streaming deduplication, the
-stateful operation an LLM-data ingest actually needs (drop re-crawled /
-re-delivered documents across micro-batches, not just within one).
+The reference keeps no stream state (SURVEY.md §2 Part B).  These are the
+monitoring operators of the batch catalogue lifted into cross-batch streams:
+CUSUM, Hampel, PSI, bucketed percentiles and the term monitor.  Each keeps a
+small per-key state (a running sum, a tail, a histogram) in the state store;
+state is per-key and partitioned by the shuffle, so it scales horizontally
+with executors.
 
-Design: group by the dedup key (content hash), keep one boolean per key in
-the state store.  Arrow-batched per group; state is per-key and partitioned
-by the shuffle, so it scales horizontally with executors.  An eviction
-timeout bounds the store (a TTL'd Bloom/exact hybrid is the 100 TB
-refinement; the operator contract stays the same).
+Cross-batch dedup is not here: the exact path is the epoch-partitioned index
+(``streaming/batch_apply.py::streaming_incremental_dedup``) and the
+bounded-state path is Spark's native ``dropDuplicatesWithinWatermark``
+(``streaming/joins.py::dedup_within_watermark``).
 """
 
 from __future__ import annotations
@@ -20,152 +21,14 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-FIRST_SEEN_OUTPUT = StructType(
-    [
-        StructField("content_sha256", StringType()),
-        StructField("value", StringType()),
-        StructField("n_duplicates_dropped", LongType()),
-    ]
-)
-
-_STATE = StructType([StructField("seen", BooleanType())])
-
-
-def streaming_first_seen(
-    stream: DataFrame, value_col: str = "value"
-) -> DataFrame:
-    """Cross-batch exact dedup: emit each distinct payload once, ever.
-
-    Input: a streaming DataFrame with ``value_col``.  Output rows carry the
-    content hash, the first-seen payload, and how many duplicates arrived
-    in the same batch.  Later occurrences (same or later micro-batches)
-    emit nothing — the per-key state remembers.
-    """
-
-    def dedup(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n = 0
-        first: str | None = None
-        for pdf in pdfs:
-            if len(pdf) and first is None:
-                first = pdf["value"].iloc[0]
-            n += len(pdf)
-        if state.exists:
-            return iter(())  # seen in an earlier batch → drop silently
-        state.update((True,))
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "content_sha256": [key[0]],
-                        "value": [first],
-                        "n_duplicates_dropped": [n - 1],
-                    }
-                )
-            ]
-        )
-
-    hashed = stream.select(F.col(value_col).alias("value")).withColumn(
-        "content_sha256", F.sha2(F.col("value"), 256)
-    )
-    return hashed.groupBy("content_sha256").applyInPandasWithState(
-        dedup,
-        outputStructType=FIRST_SEEN_OUTPUT,
-        stateStructType=_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4.x) — the TTL'd refinement.
-# --------------------------------------------------------------------------
-def streaming_first_seen_ttl(
-    stream: DataFrame, value_col: str = "value", ttl_ms: int = 24 * 3600 * 1000
-) -> DataFrame:
-    """Cross-batch exact dedup with a BOUNDED state store — the 100 TB
-    refinement of ``streaming_first_seen``, on the Spark 4.x
-    ``transformWithStateInPandas`` API.
-
-    ``applyInPandasWithState`` keeps one state row per key forever; over an
-    unbounded crawl the store grows with the distinct-document count.  Here
-    the per-key marker is a ``ValueState`` with a native TTL: keys idle
-    longer than ``ttl_ms`` are evicted by the state store itself (RocksDB
-    provider), so memory is bounded by the distinct keys per TTL window.
-    Trade-off (documented, deliberate): a payload re-arriving after the TTL
-    re-emits — "exactly once ever" degrades to "at most once per TTL
-    window", which is the standard contract for dedup at crawl scale.
-
-    Requires the RocksDB state store provider (built into Spark 4):
-    ``spark.sql.streaming.stateStore.providerClass =
-    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
-    — and ``google.protobuf`` at runtime (the transformWithState state
-    protocol is protobuf-encoded; standard on real clusters, absent in this
-    container, so the pytest is import-gated the same way as the PIL decode
-    and boto3 sink stubs).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FirstSeenTTL(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", "seen boolean", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = 0
-            first: str | None = None
-            for pdf in rows:
-                if len(pdf) and first is None:
-                    first = pdf["value"].iloc[0]
-                n += len(pdf)
-            if self._seen.exists():
-                # refresh the idle clock: TTL evicts keys IDLE for ttl_ms,
-                # not keys merely older than ttl_ms — a continuously-hot key
-                # must not re-emit every window (ADVICE r2)
-                self._seen.update((True,))
-                return iter(())
-            self._seen.update((True,))
-            return iter(
-                [
-                    pd.DataFrame(
-                        {
-                            "content_sha256": [key[0]],
-                            "value": [first],
-                            "n_duplicates_dropped": [n - 1],
-                        }
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    hashed = stream.select(F.col(value_col).alias("value")).withColumn(
-        "content_sha256", F.sha2(F.col("value"), 256)
-    )
-    return hashed.groupBy("content_sha256").transformWithStateInPandas(
-        FirstSeenTTL(),
-        outputStructType=FIRST_SEEN_OUTPUT,
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )
-
 
 # --------------------------------------------------------------------------
 # Streaming CUSUM — the batch operator (plans/monitor_queries.c16_cusum) as

@@ -129,6 +129,59 @@ def test_streaming_incremental_dedup_drops_cross_batch_copies(spark, sf_dir, tmp
     assert "epoch" in idx.columns
 
 
+def test_streaming_incremental_dedup_fails_on_corrupt_index(spark, sf_dir, tmp_path):
+    """A committed index partition that cannot be read must fail the next
+    epoch.  Reading it as "no index yet" would re-emit every cross-batch
+    copy with the query reporting success.  An empty partition dir (what an
+    aborted write leaves) is still "no index yet"."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from logspout_kinesis_tests_spark.streaming.batch_apply import (
+        streaming_incremental_dedup,
+    )
+
+    rows = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(6).collect()
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    ckpt, index, out = (str(tmp_path / d) for d in ("ckpt", "index", "out"))
+
+    def _write_batch(i, pairs):
+        path = os.path.join(src_dir, f"docs-{i}.json")
+        with open(path, "w") as f:
+            for doc_id, text in pairs:
+                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
+        os.utime(path, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
+
+    def _drain():
+        return streaming_incremental_dedup(
+            spark, src_dir, ckpt, "doc_id long, text string", index, out,
+            max_files_per_trigger=1,
+        )
+
+    _write_batch(0, [(r["doc_id"], r["text"]) for r in rows[:3]])
+    os.makedirs(os.path.join(index, "epoch=0"))
+    q = _drain()
+    q.awaitTermination(120)
+    assert q.exception() is None
+    parts = glob.glob(os.path.join(index, "epoch=0", "part-*.parquet"))
+    assert parts, "epoch 0 committed no index part"
+    for path in parts:
+        with open(path, "wb") as f:
+            f.write(b"not a parquet file")
+
+    # batch 1: copies of batch 0 under higher ids, plus fresh documents
+    _write_batch(1, [(r["doc_id"] + 1_000_000, r["text"]) for r in rows[:3]]
+                 + [(r["doc_id"], r["text"]) for r in rows[3:]])
+    q2 = _drain()
+    with _pytest_mark_mod.raises(StreamingQueryException):
+        q2.awaitTermination(120)
+    emitted = set()
+    for path in glob.glob(os.path.join(out, "epoch=1", "part-*.json")):
+        with open(path) as f:
+            emitted |= {json.loads(line)["doc_id"] for line in f}
+    assert not {i for i in emitted if i >= 1_000_000}
+
+
 def test_streaming_bloom_dedup_drops_cross_batch_copies(spark, sf_dir, tmp_path):
     """Bloom-index variant: true duplicates are always dropped across
     batches (no false negatives); at this tiny n vs m=2^20 the fp

@@ -103,7 +103,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
 def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     """Same key within the watermark window emits once; after the watermark
     evicts the key's state, the key may be emitted again (state is bounded,
-    by design — exact-forever dedup is streaming_first_seen)."""
+    by design — exact-forever dedup is streaming_incremental_dedup)."""
     src = str(tmp_path / "src")
     out_dir = str(tmp_path / "out")
     os.makedirs(src)

@@ -226,41 +226,6 @@ def test_streaming_psi_recovers_from_checkpoint(spark, tmp_path):
     assert got[3]["psi"] > 0.25
 
 
-def test_streaming_first_seen_recovers_from_checkpoint(spark, tmp_path):
-    """The seen-set must survive a crash-restart: payloads first emitted
-    before the crash stay suppressed afterwards, the replayed epoch
-    re-emits exactly its own first-seen rows, and post-restart batches of
-    pure duplicates emit nothing — byte-identical to an uninterrupted run."""
-    from pyspark.sql import functions as F
-
-    from logspout_kinesis_tests_spark.streaming.stateful import (
-        streaming_first_seen,
-    )
-
-    def payload(i: int) -> int:
-        return i % 6
-
-    files = [
-        [_event(i, float(payload(i))) for i in range(0, 4)],     # p0..p3 new
-        [_event(i, float(payload(i))) for i in range(4, 8)],     # p4,p5 new + p0,p1 dup
-        [_event(i, float(payload(i))) for i in range(8, 12)],    # all dup
-        [_event(i, float(payload(i))) for i in range(12, 16)],   # all dup
-    ]
-
-    def build(stream):
-        return streaming_first_seen(
-            stream.select(
-                F.concat(F.lit("p"), F.col("value").cast("int").cast("string")).alias(
-                    "value"
-                )
-            )
-        )
-
-    ref = _kill_restart_vs_uninterrupted(spark, tmp_path, build, files)
-    got = sorted(json.loads(r)["value"] for r in ref)
-    assert got == [f"p{i}" for i in range(6)]  # each payload exactly once
-
-
 def test_streaming_percentiles_recovers_from_checkpoint(spark, tmp_path):
     """The accumulated histogram must survive a crash-restart: post-restart
     quantiles rank over counts that include pre-crash traffic, and every

@@ -1,5 +1,6 @@
-"""Watermarked event-time windows and stateful cross-batch dedup in real
-streaming mode (micro-batches via maxFilesPerTrigger)."""
+"""Watermarked event-time windows and the stateful monitors (CUSUM, Hampel,
+PSI, percentiles) in real streaming mode (micro-batches via
+maxFilesPerTrigger)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import pytest
 
 from pyspark.sql import functions as F
 from logspout_kinesis_tests_spark.schemas import EVENTS
-from logspout_kinesis_tests_spark.streaming.stateful import streaming_first_seen
 
 
 def _write_events(path: str, rows: list[dict]) -> None:
@@ -86,111 +86,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     # the 10:00 window closed with exactly the 2 on-time events; the late
     # event_id=4 (10:05, after watermark passed 12:30) was dropped
     assert rows.get("2026-08-13 10:00:00") == 2, rows
-
-
-def test_streaming_first_seen_dedup_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # same payload appears in batch 1 (×2) and again in batch 2; a new
-    # payload appears in batch 2
-    _write_events(os.path.join(src, "b1.json"), [{"v": "doc-A"}, {"v": "doc-A"}])
-    _write_events(os.path.join(src, "b2.json"), [{"v": "doc-A"}, {"v": "doc-B"}])
-    stream = (
-        spark.readStream.schema("v string")
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    out = streaming_first_seen(stream, value_col="v")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("first_seen")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM first_seen ORDER BY value").collect()
-    # doc-A emitted once (from batch 1, with 1 same-batch duplicate
-    # counted); the batch-2 re-delivery emitted nothing; doc-B emitted once
-    assert [(r["value"], r["n_duplicates_dropped"]) for r in rows] == [
-        ("doc-A", 1),
-        ("doc-B", 0),
-    ]
-
-
-def test_streaming_first_seen_ttl(spark, tmp_path):
-    """transformWithStateInPandas variant: dedup across batches while the
-    TTL is live; a key idle past the TTL is evicted and re-emits.
-
-    The transformWithState state-server protocol needs google.protobuf at
-    runtime (standard on real clusters; absent in this container, where
-    installs are off-limits) — skip rather than fail when it is missing.
-    """
-    import time
-
-    pytest.importorskip("google.protobuf")
-
-    from logspout_kinesis_tests_spark.streaming.stateful import (
-        streaming_first_seen_ttl,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        out_dir = str(tmp_path / "out")
-        os.makedirs(out_dir)
-
-        def drain() -> None:
-            stream = spark.readStream.schema("v string").json(src)
-            out = streaming_first_seen_ttl(stream, value_col="v", ttl_ms=3000)
-
-            def collect(df, batch_id):
-                emitted = [
-                    (r["value"], r["n_duplicates_dropped"]) for r in df.collect()
-                ]
-                if emitted:
-                    with open(
-                        os.path.join(out_dir, f"emit-{batch_id}.json"), "w"
-                    ) as f:
-                        json.dump(emitted, f)
-
-            q = (
-                out.writeStream.foreachBatch(collect)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        _write_events(os.path.join(src, "b1.json"), [{"v": "doc-A"}, {"v": "doc-A"}])
-        drain()
-        # within TTL: re-delivery is dropped, new key emits
-        _write_events(os.path.join(src, "b2.json"), [{"v": "doc-A"}, {"v": "doc-B"}])
-        drain()
-        # past TTL: doc-A's marker was evicted → re-emits
-        time.sleep(5)
-        _write_events(os.path.join(src, "b3.json"), [{"v": "doc-A"}])
-        drain()
-
-        import glob
-
-        emitted: list[tuple[str, int]] = []
-        for path in sorted(glob.glob(os.path.join(out_dir, "emit-*.json"))):
-            with open(path) as f:
-                emitted.extend((v, n) for v, n in json.load(f))
-        assert emitted == [("doc-A", 1), ("doc-B", 0), ("doc-A", 0)], emitted
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_streaming_session_window_merges_across_batches(spark, tmp_path):
