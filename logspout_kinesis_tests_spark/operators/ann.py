@@ -23,20 +23,19 @@ from pyspark.sql import functions as F
 from logspout_kinesis_tests_spark.functions.vectors import cosine_similarity
 
 
-def _centroid_sims(
+def _nearest_cell(
     df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, cell, sim) for every vector × centroid — the ONE cosine table
-    shared by the assignment rule (argmax → cell) and the drift scorer
-    (max → 1−sim residual), so the qerr signal can never diverge from the
-    similarity the assigner actually maximizes.  Zero-norm rows score
-    NULL (excluded from argmax, coalesced by the scorer)."""
+    """(id, cell) for each vector: nearest centroid by cosine (max_by with a
+    deterministic tie-break on cell id).  Zero-norm rows score NULL and so
+    never win the argmax.  Groups by the id only — grouping on the
+    embedding array would hash 64 floats per row for nothing."""
     from logspout_kinesis_tests_spark.functions.vectors import dot_product, l2_norm
 
     # row norm folded once, not once per centroid (nlist× the folds
     # otherwise); same operation shape as cosine_similarity → identical sims
     denom = F.col("_nv") * F.col("_ncent")
-    return (
+    sims = (
         df.select(
             F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_nv")
         )
@@ -55,15 +54,7 @@ def _centroid_sims(
             .alias("sim"),
         )
     )
-
-
-def _nearest_cell(
-    df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, cell) for each vector: nearest centroid by cosine (max_by with a
-    deterministic tie-break on cell id).  Groups by the id only — grouping
-    on the embedding array would hash 64 floats per row for nothing."""
-    return _centroid_sims(df, centroids, id_col, vec_col).groupBy(id_col).agg(
+    return sims.groupBy(id_col).agg(
         F.max_by("cell", F.struct(F.col("sim"), -F.col("cell"))).alias("cell")
     )
 
@@ -291,12 +282,10 @@ def ivf_index(
     Training cost shape: a single-partition training frame (the
     ``coalesce(1)`` bounded-sample shape the batch gate rows and the
     recall monitor use — standard IVF practice trains on a sample, not
-    the corpus; streaming micro-batch trains engage only when the batch
-    arrives single-partition, e.g. one drip file per trigger) takes the
-    one-job path: collect the sample once and run all Lloyd rounds in
-    driver Python (:func:`_lloyd_one_job`; assignments provably identical,
-    centroids within ulps — see its docstring).  The collect is bounded
-    BEFORE it is paid (ADVICE r14): a byte-safe sizes probe
+    the corpus) takes the one-job path: collect the sample once and run
+    all Lloyd rounds in driver Python (:func:`_lloyd_one_job`; assignments
+    provably identical, centroids within ulps — see its docstring).  The
+    collect is bounded BEFORE it is paid (ADVICE r14): a byte-safe sizes probe
     (:func:`_one_job_sample`) checks the row bound, ops cap, NULLs and
     raggedness first, so a large single-partition frame never
     materializes on the driver.  Multi-partition frames keep the
@@ -822,7 +811,7 @@ def ivf_probe_scored(
 
     This is the probe half shared by :func:`ivf_topk` (which ranks it to
     top-k) and consumers that rank the SAME candidate frame several ways —
-    e.g. the streaming-ANN recall monitor derives every epoch's top-k from
+    e.g. the ``c10_ann_recall_monitor`` row derives every epoch's top-k from
     one probe join by carrying each corpus row's arrival epoch through
     ``carry_cols`` and ranking per epoch, instead of re-probing per epoch.
     Candidate pairs are unique (each corpus vector lives in exactly one
@@ -898,31 +887,6 @@ def ivf_topk(
     )
 
 
-def _pq_cell_d2(
-    vectors: DataFrame, codebooks: DataFrame, m: int, dsub: int,
-    corpus_id: str, vec_col: str,
-) -> DataFrame:
-    """(corpus_id, sub, cell, d2) — the ONE subvector-to-cell squared-L2
-    table shared by the encoder (per-sub argmin → code) and the drift
-    scorer (per-sub min → residual), so the qerr signal can never diverge
-    from the distance the encoder actually minimizes."""
-    sub_df = vectors.select(
-        F.col(corpus_id), F.posexplode(_pq_subvectors(vec_col, m, dsub)).alias("sub", "svec")
-    )
-    return sub_df.join(
-        F.broadcast(codebooks.select("sub", "cell", "centroid")), "sub"
-    ).select(
-        F.col(corpus_id),
-        "sub",
-        "cell",
-        F.aggregate(
-            F.zip_with(F.col("svec"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-
-
 def _guarded_codebooks(
     codebooks: DataFrame, dsub: int, who: str, null_ok: bool = False
 ) -> DataFrame:
@@ -971,7 +935,7 @@ def _checked_geometry(
     who: str,
     null_ok: bool = False,
 ) -> DataFrame:
-    """Shared loud length guard for the encode AND drift-scoring paths —
+    """Shared loud length guard for the encode, build and search paths —
     one contract for malformed input.  NULL embeddings report length -1
     (F.size(NULL) is NULL; an unguarded concat would feed raise_error a
     NULL message, killing the batch with no diagnostics).  ``null_ok``
@@ -1009,15 +973,14 @@ def pq_encode(
     The incremental-ingest half of the PQ lifecycle: ``pq_index`` trains
     codebooks once per corpus snapshot; arriving vectors are then encoded
     with this function and appended to the codes table — no retraining, no
-    index rebuild (the streaming flow ``streaming/batch_apply.py::
-    streaming_pq_ingest`` drives it per micro-batch).  The assignment is
-    the IDENTICAL min-(d², cell) rule as ``pq_index``'s internal
-    ``_assign`` (same fold, same tie-break), so codes produced here are
-    indistinguishable from build-time codes; m and dsub are inferred from
-    the codebooks, and any vector whose length differs from m·dsub fails
-    the job loudly — F.slice on a short vector would otherwise yield
-    short subvectors, zip_with would null-pad, d2 would fold to NULL and
-    min_by would append an arbitrary code to the index silently.
+    index rebuild.  The assignment is the IDENTICAL min-(d², cell) rule as
+    ``pq_index``'s internal ``_assign`` (same fold, same tie-break), so
+    codes produced here are indistinguishable from build-time codes; m and
+    dsub are inferred from the codebooks, and any vector whose length
+    differs from m·dsub fails the job loudly — F.slice on a short vector
+    would otherwise yield short subvectors, zip_with would null-pad, d2
+    would fold to NULL and min_by would append an arbitrary code to the
+    index silently.
 
     ``geometry=(m, dsub)`` (trusted geometry, VERDICT r14 #2): skips the
     eager codebook-probe ``head()`` — one scheduling floor per call — for
@@ -1035,67 +998,23 @@ def pq_encode(
         ).head()
         m, dsub = meta["max_sub"] + 1, meta["dsub"]
     checked = _checked_geometry(vectors, corpus_id, vec_col, m, dsub, "pq_encode")
-    scored = _pq_cell_d2(checked, codebooks, m, dsub, corpus_id, vec_col)
+    sub_df = checked.select(
+        F.col(corpus_id), F.posexplode(_pq_subvectors(vec_col, m, dsub)).alias("sub", "svec")
+    )
+    scored = sub_df.join(
+        F.broadcast(codebooks.select("sub", "cell", "centroid")), "sub"
+    ).select(
+        F.col(corpus_id),
+        "sub",
+        "cell",
+        F.aggregate(
+            F.zip_with(F.col("svec"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("d2"),
+    )
     return scored.groupBy(corpus_id, "sub").agg(
         F.min_by("cell", F.struct(F.col("d2"), F.col("cell"))).alias("code")
-    )
-
-
-def pq_quantization_error(
-    vectors: DataFrame,
-    codebooks: DataFrame,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-vector PQ reconstruction error against FROZEN codebooks →
-    (corpus_id, qerr): the summed squared-L2 distance between each
-    subvector and its chosen codebook cell — exactly the d2 the encoder
-    minimizes, so qerr is the residual the ADC search sees.
-
-    This is the drift signal for the train-once streaming ingest: codebooks
-    frozen on the first batch fit later batches worse as the stream's
-    distribution shifts, and mean qerr per epoch rises with that shift
-    (``streaming/batch_apply.py`` records it per epoch;
-    ``ann_ingest_health`` turns it into a drifted-epoch flag).  Same plan
-    shape as :func:`pq_encode` — one broadcast join, no shuffle beyond the
-    final per-id agg."""
-    meta = codebooks.agg(
-        F.max("sub").alias("max_sub"), F.max(F.size("centroid")).alias("dsub")
-    ).head()
-    m, dsub = meta["max_sub"] + 1, meta["dsub"]
-    # same loud guard as pq_encode: a malformed vector must fail the
-    # health scan, not silently shrink the sample the mean is taken over
-    scored = _pq_cell_d2(
-        _checked_geometry(vectors, corpus_id, vec_col, m, dsub, "pq_quantization_error"),
-        codebooks, m, dsub, corpus_id, vec_col,
-    )
-    return (
-        scored.groupBy(corpus_id, "sub")
-        .agg(F.min("d2").alias("min_d2"))
-        .groupBy(corpus_id)
-        .agg(F.sum("min_d2").alias("qerr"))
-    )
-
-
-def ivf_quantization_error(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-vector IVF assignment error against FROZEN centroids →
-    (corpus_id, qerr): ``1 − cosine(vec, nearest centroid)`` over the SAME
-    similarity table the assignment rule (:func:`ivf_assign` /
-    ``_nearest_cell``) maximizes, so a rising mean qerr means arriving
-    vectors no longer sit near any training-time centroid (the IVF twin
-    of :func:`pq_quantization_error`; zero-norm vectors count as
-    error 1)."""
-    sims = _centroid_sims(
-        vectors.select(F.col(corpus_id), F.col(vec_col)),
-        centroids, corpus_id, vec_col,
-    )
-    return sims.groupBy(corpus_id).agg(
-        (F.lit(1.0) - F.coalesce(F.max("sim"), F.lit(0.0))).alias("qerr")
     )
 
 

@@ -1,5 +1,5 @@
-"""Round-12 additions: cross-modal dedup composite + streaming-ANN recall
-monitor parity.
+"""Round-12 additions: cross-modal dedup composite + epoch-arrival ANN
+recall monitor.
 
 Registered LAST (plans/__init__) so the driver window's stale-green drain
 (the r5/r6 cohort, VERDICT r11 #2) loses as few slots as possible — this
@@ -253,7 +253,7 @@ def c8_crossmodal_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# C10+ — streaming-ANN recall monitor, batch parity (VERDICT r11 #6).
+# C10+ — ANN recall monitor over an epoch-arriving corpus (VERDICT r11 #6).
 # --------------------------------------------------------------------------
 
 _ANN_MON_EPOCHS = 3
@@ -332,10 +332,9 @@ def _epoch_topk_marks(scored: DataFrame) -> DataFrame:
     # surfaces as low_agreement / low_self_recovery violation rows that go
     # red against the oracle when emitted.
     oracle=_ann_monitor_oracle(),
-    doc="C10+/C7+ (VERDICT r11 #6): batch parity for the streaming ANN "
-    "recall monitor (streaming/batch_apply.py _streaming_ann_ingest "
-    "probe_panel) — the corpus arrives in 3 deterministic epochs "
-    "(vec_id mod 3), IVF centroids train ONCE on epoch 0 (the streaming "
+    doc="C10+/C7+ (VERDICT r11 #6): ANN recall monitor over an "
+    "epoch-arriving corpus — the corpus arrives in 3 deterministic epochs "
+    "(vec_id mod 3), IVF centroids train ONCE on epoch 0 (the "
     "train-once contract), and after each epoch the frozen 50-query "
     "panel's approximate (IVF) and exact top-5 are compared; per-epoch "
     "exact-side self-match counts are the oracle-pinned structural truth "
@@ -385,8 +384,8 @@ def c10_ann_recall_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("e") == 0).coalesce(1), nlist=16, iters=2, one_job=True
     )[1]
     # ONE inverted-file assignment for the whole corpus: per-vector cell
-    # membership is snapshot-independent (frozen centroids) — the
-    # streaming equivalent is the codes table the epochs append to, read
+    # membership is snapshot-independent (frozen centroids) — an
+    # incremental index would append it epoch by epoch; it is read
     # here in one piece instead of re-assigned per epoch.  Its single
     # consumer is the probe join inside the one big action, so no
     # checkpoint either.

@@ -18,9 +18,9 @@ from logspout_kinesis_tests_spark.plans.registry import register
 from logspout_kinesis_tests_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
-# C10+/C19+ — ANN index compaction (VERDICT r12 #6): the epoch-partitioned
-# streaming PQ index accumulates one codes + one vecs fragment per
-# micro-batch; compact_ann_index folds them with search results invariant.
+# C10+/C19+ — ANN index compaction (VERDICT r12 #6): an epoch-partitioned
+# PQ index accumulates one codes + one vecs fragment per arrival epoch;
+# compact_ann_index folds them with search results invariant.
 # --------------------------------------------------------------------------
 
 _CMP_EPOCHS = 3
@@ -67,11 +67,11 @@ def _cmp_oracle() -> str:
     # epoch partition.
     oracle=_cmp_oracle(),
     doc="C10+/C19+ (VERDICT r12 #6): ANN index compaction — the index "
-    "analogue of the C19 small-file maintenance pass.  Builds the "
-    "streaming PQ index shape on disk (codes/epoch=N + vecs/epoch=N per "
-    "arrival epoch, codebooks trained once on epoch 0 — the "
-    "streaming_pq_ingest layout), folds a copy of every epoch fragment "
-    "with compact_ann_index (streaming/batch_apply.py), then searches a "
+    "analogue of the C19 small-file maintenance pass.  Builds an "
+    "epoch-partitioned PQ index on disk (codes/epoch=N + vecs/epoch=N per "
+    "arrival epoch, codebooks trained once on epoch 0), folds a copy of "
+    "every epoch fragment with compact_ann_index "
+    "(streaming/batch_apply.py), then searches a "
     "frozen panel against the fragmented and the folded index as "
     "parallel subplans of ONE action, emitting the invariant as gates: "
     "result triples (query, neighbour, rank) and quantized re-rank "
@@ -148,7 +148,7 @@ def c10_index_compaction_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_dir = tempfile.mkdtemp(prefix="ann_compact_parity_")
     try:
-        # the streaming_pq_ingest layout — one codes + one vecs fragment
+        # the epoch-partitioned layout — one codes + one vecs fragment
         # per arrival epoch, encoded against the frozen epoch-0 codebooks.
         # ONE tagged partitionBy write lays down BOTH tables' epoch=N
         # fragment dirs in a single job (VERDICT r14 #2: the two per-table

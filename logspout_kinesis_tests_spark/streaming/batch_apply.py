@@ -12,8 +12,9 @@ broadcast model) and for intra-batch dedup.  CROSS-batch state lives in an
 epoch-partitioned index beside the stream: each epoch reads the partitions
 committed before it and overwrites its own, so a replayed epoch is
 idempotent.  ``streaming_incremental_dedup`` is the exact cross-batch dedup
-on that index; the Bloom, MinHash, heavy-hitters and ANN flows share its
-``_index_before_epoch`` / ``compact_epoch_index`` machinery.
+on that index; the MinHash and heavy-hitters flows share its
+``_index_before_epoch`` / ``compact_epoch_index`` machinery, and
+``compact_ann_index`` folds an ANN index kept in the same layout.
 """
 
 from __future__ import annotations
@@ -169,86 +170,6 @@ def streaming_incremental_dedup(
     )
 
 
-def streaming_bloom_dedup(
-    spark: SparkSession,
-    src_dir: str,
-    checkpoint_dir: str,
-    schema: StructType | str,
-    index_dir: str,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    m: int = 1 << 20,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Cross-batch dedup against a persisted BLOOM index instead of the
-    exact hash index — the bounded-memory end of the trade-off:
-
-    - exact index (``streaming_incremental_dedup``): no wrong drops, index
-      grows with distinct-document count (32 B/doc);
-    - Bloom index (here): index is ≤ n·k set-bit rows capped by ``m``
-      regardless of corpus size, but a false positive silently drops a
-      unique document at the analytic (1-e^{-kn/m})^k rate — acceptable
-      for crawl dedup (a dropped unique ≈ a sampling event), never for
-      billing-grade exactness.  No false negatives: a true duplicate is
-      always dropped.
-
-    Content keyed by sha256(text); probe/insert are the Bloom bucket
-    equi-joins from ``operators.timeseries`` — no driver-side state.
-
-    Restart safety mirrors ``streaming_incremental_dedup``: bits are written
-    to ``index_dir/epoch=N/`` with mode=overwrite and the probe reads only
-    ``epoch < N``, so a batch replayed between index write and checkpoint
-    commit probes the pre-batch filter (its own bits excluded), keeping the
-    'no false negatives, fp-rate-bounded drops' contract under replay too.
-    """
-    from logspout_kinesis_tests_spark.operators.dedup import with_content_hash
-    from logspout_kinesis_tests_spark.operators.timeseries import (
-        bloom_build,
-        bloom_probe,
-    )
-    from pyspark.sql import functions as F
-
-    ensure_runtime_confs(spark)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(src_dir)
-
-    def _sink(bdf: DataFrame, epoch_id: int) -> None:
-        hashed = with_content_hash(bdf, text_col)
-        bits = _index_before_epoch(spark, index_dir, epoch_id, "bucket")
-        if bits is None:  # first epoch: empty filter
-            bits = hashed.limit(0).select(F.lit(0).cast("long").alias("bucket"))
-        probed = bloom_probe(
-            bits, hashed.select("content_sha256").distinct(), "content_sha256", k, m
-        )
-        fresh = probed.filter(~F.col("present")).select("content_sha256")
-        # min-id per fresh hash keeps the survivor choice batching-invariant
-        survivors = (
-            hashed.join(fresh, "content_sha256", "left_semi")
-            .groupBy("content_sha256")
-            .agg(F.min(F.col(id_col)).alias("_keep"))
-            .join(hashed, "content_sha256")
-            .filter(F.col(id_col) == F.col("_keep"))
-            .drop("_keep", "content_sha256")
-        )
-        survivors.coalesce(1).write.mode("overwrite").json(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-        bloom_build(
-            with_content_hash(survivors, text_col), "content_sha256", k, m
-        ).write.mode("overwrite").parquet(os.path.join(index_dir, f"epoch={epoch_id}"))
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_minhash_dedup(
     spark: SparkSession,
     src_dir: str,
@@ -264,9 +185,7 @@ def streaming_minhash_dedup(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Cross-batch NEAR-dup dedup against a persisted MinHash index — the
-    fuzzy end of the streaming dedup trio (exact hashes →
-    ``streaming_incremental_dedup``; bounded-memory approximate →
-    ``streaming_bloom_dedup``; near-duplicates → here).
+    fuzzy twin of ``streaming_incremental_dedup`` (exact hashes).
 
     The index is two epoch-partitioned tables derived from survivors only:
 
@@ -274,8 +193,8 @@ def streaming_minhash_dedup(
     - ``index_dir/sigs/epoch=N``   (id, minhash)      — similarity verify.
 
     Per batch: signature the batch, equi-join its band buckets against the
-    indexed bands (``epoch < N`` — same replay-safety contract as the other
-    two flows), verify candidates by SIGNATURE-estimated Jaccard
+    indexed bands (``epoch < N`` — same replay-safety contract as the exact
+    flow), verify candidates by SIGNATURE-estimated Jaccard
     (matching-positions / num_hashes; E[est] = exact Jaccard, so the index
     never needs document bodies), drop batch docs estimating >= ``threshold``
     vs any indexed doc, then resolve intra-batch near-dup clusters via
@@ -403,9 +322,9 @@ def streaming_minhash_dedup(
         _banded(surv_sig).write.mode("overwrite").parquet(
             os.path.join(index_dir, "bands", f"epoch={epoch_id}")
         )
-        # health row (the ann_ingest_health contract applied to dedup): all
-        # counts derive from the batch + pre-batch index only, so a crash
-        # replay overwrites the row byte-identically
+        # health row (read by dedup_ingest_health): all counts derive from
+        # the batch + pre-batch index only, so a crash replay overwrites the
+        # row byte-identically
         n_in = bdf.count()
         n_cross = 0 if dup_new is None else dup_new.count()
         # count the plan, not the written files: an all-dropped epoch's JSON
@@ -521,9 +440,9 @@ def compact_epoch_index(
 
     The fold depends on the index's semantics — pass the right one:
 
-    - ``sum_cols=None`` (membership indexes: hashes, Bloom buckets, bands,
-      signatures): deduplicating ``distinct()`` — replayed epochs can leave
-      identical rows in multiple partitions; after compaction each
+    - ``sum_cols=None`` (membership indexes: hashes, bands, signatures,
+      ANN codes and vecs): deduplicating ``distinct()`` — replayed epochs
+      can leave identical rows in multiple partitions; after compaction each
       surviving row exists once.
     - ``sum_cols=[...]`` (additive indexes: the heavy-hitters counts):
       group by the remaining columns and SUM the named ones — distinct()
@@ -607,22 +526,20 @@ def compact_epoch_index(
     ).count()
 
 
-#: Epoch-partitioned tables a streaming ANN index accumulates, in fold
-#: order.  ``aux`` (frozen codebooks/centroids) and ``health`` (per-epoch
-#: monitoring audit rows) are deliberately NOT folded: aux is not
-#: epoch-partitioned, and health rows are the drift/recall audit trail
-#: whose per-epoch identity IS their value.
+#: Epoch-partitioned tables of an ANN index, in fold order.  Anything else
+#: under the index dir (e.g. frozen codebooks, which are not
+#: epoch-partitioned) is left alone.
 _ANN_INDEX_TABLES = ("codes", "vecs")
 
 
 def compact_ann_index(
     spark: SparkSession, index_dir: str, upto_epoch: int, count_rows: bool = True
 ) -> dict[str, int]:
-    """Fold a streaming ANN index's epoch fragments (VERDICT r12 #6) —
-    the index analogue of the C19 small-file problem: every micro-batch
-    appends ``codes/epoch=N`` (m ints/vector) and ``vecs/epoch=N``
-    (re-rank precision), so long-running ingest accumulates thousands of
-    small fragments whose per-file open/footer cost eventually dominates
+    """Fold an epoch-partitioned ANN index's fragments (VERDICT r12 #6) —
+    the index analogue of the C19 small-file problem: every arrival epoch
+    adds ``codes/epoch=N`` (m ints/vector) and ``vecs/epoch=N`` (re-rank
+    precision), so a long-lived index accumulates thousands of small
+    fragments whose per-file open/footer cost eventually dominates
     the probe scan.
 
     Invariant: the fold preserves each table's exact row SET — both tables
@@ -678,61 +595,6 @@ def compact_ann_index(
     return out
 
 
-def _trained_epoch_path(aux_dir: str) -> str:
-    return os.path.join(aux_dir, "_TRAINED_EPOCH")
-
-
-def _read_trained_epoch(aux_dir: str) -> int | None:
-    """Epoch that trained the CURRENT aux, or None if training never
-    completed (underscore-prefixed, so Spark parquet reads ignore it)."""
-    try:
-        with open(_trained_epoch_path(aux_dir)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
-def _write_trained_epoch(aux_dir: str, epoch_id: int) -> None:
-    """Atomic (tmp + rename) so a crash never leaves a partial marker."""
-    tmp = _trained_epoch_path(aux_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(epoch_id))
-    os.replace(tmp, _trained_epoch_path(aux_dir))
-
-
-def _write_health_row(
-    index_dir: str,
-    epoch_id: int,
-    n_vectors: int,
-    mean_qerr: float,
-    baseline: bool,
-    recall: float | None = None,
-    n_probe: int = 0,
-) -> None:
-    """One JSON health row per epoch (driver-side, deterministic content →
-    crash-replay overwrites byte-identically)."""
-    import json
-
-    health_dir = os.path.join(index_dir, "health")
-    os.makedirs(health_dir, exist_ok=True)
-    row = {
-        "epoch": epoch_id,
-        "n_vectors": n_vectors,
-        "mean_qerr": round(mean_qerr, 9),
-        "baseline": baseline,
-    }
-    if recall is not None:
-        row["recall"] = round(recall, 9)
-        row["n_probe"] = n_probe
-    # atomic tmp+replace: ann_ingest_health runs from a monitoring cron
-    # beside the live stream, so a reader must never see a partial row
-    final = os.path.join(health_dir, f"epoch={epoch_id}.json")
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(row, f, sort_keys=True)
-    os.replace(tmp, final)
-
-
 def _read_health_rows(index_dir: str, required: dict) -> list:
     """Read ``health/epoch=*.json`` rows, skipping anything that is not a
     dict carrying every ``required`` key with the right type — crash debris
@@ -769,68 +631,6 @@ def _read_health_rows(index_dir: str, required: dict) -> list:
     return rows
 
 
-def ann_ingest_health(
-    index_dir: str, factor: float = 2.0, recall_floor_ratio: float = 0.8
-) -> list:
-    """Read the per-epoch health rows of a streaming ANN index and flag
-    codebook/centroid drift: an epoch is ``drifted`` when its mean
-    quantization error exceeds ``factor`` × the most recent BASELINE
-    epoch's (the epoch that trained — or retrained — the frozen aux).
-
-    This is the monitor the train-once contract needs: recall decay under
-    distribution shift is silent (searches still return k rows, just the
-    wrong ones), while mean qerr against the frozen aux rises in direct
-    proportion to how far the stream has moved from the training batch.
-    When an epoch trips the flag, refresh the index with
-    :func:`recode_epoch_index` (quiesced, replay-safe) — its retrain
-    writes a new baseline row, resetting the comparison.
-
-    Pure driver-side file reads — no Spark session needed, so it can run
-    from a monitoring cron beside the stream.
-    """
-    rows = _read_health_rows(
-        index_dir,
-        {"epoch": int, "mean_qerr": (int, float), "baseline": bool},
-    )
-    base = None
-    base_recall = None
-    for r in rows:
-        if r.get("baseline"):
-            base = r["mean_qerr"]
-            # RESET on every baseline, including one without a recall
-            # field (recode_epoch_index writes exactly that): a retrain
-            # must not leave later epochs judged against the pre-retrain
-            # panel recall — degradation verdicts resume once a new
-            # probed baseline exists
-            base_recall = (
-                r["recall"]
-                if isinstance(r.get("recall"), (int, float))
-                and not isinstance(r.get("recall"), bool)
-                else None
-            )
-        r["baseline_qerr"] = base
-        # a zero-error baseline (aux reproduces its training batch
-        # exactly) makes ANY later error the strongest drift signal, not
-        # a case to suppress — compare against a tiny absolute floor
-        r["drifted"] = bool(
-            not r.get("baseline")
-            and base is not None
-            and r["mean_qerr"] > (factor * base if base > 0 else 1e-12)
-        )
-        # the DIRECT quality tripwire (VERDICT r11 #6): qerr is a proxy,
-        # recall of the frozen probe panel vs exact top-k on the same
-        # snapshot is the quantity users feel — flag an epoch whose recall
-        # fell below recall_floor_ratio x the baseline epoch's
-        r["recall_degraded"] = bool(
-            not r.get("baseline")
-            and base_recall is not None
-            and isinstance(r.get("recall"), (int, float))
-            and not isinstance(r.get("recall"), bool)
-            and r["recall"] < recall_floor_ratio * base_recall
-        )
-    return rows
-
-
 def _write_dedup_health_row(
     index_dir: str,
     epoch_id: int,
@@ -840,8 +640,7 @@ def _write_dedup_health_row(
     n_survivors: int,
 ) -> None:
     """One JSON health row per dedup-ingest epoch (driver-side; atomic
-    tmp+replace so a monitoring cron never reads a partial row — the same
-    contract as the ANN health writer)."""
+    tmp+replace so a monitoring cron never reads a partial row)."""
     import json
 
     health_dir = os.path.join(index_dir, "health")
@@ -906,495 +705,3 @@ def dedup_ingest_health(index_dir: str, factor: float = 3.0) -> list:
         )
         prior_rates.append(rate)
     return rows
-
-
-def _streaming_ann_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    checkpoint_dir: str,
-    schema: StructType | str,
-    index_dir: str,
-    out_dir: str,
-    id_col: str,
-    vec_col: str,
-    code_cols: list[str],
-    train,
-    encode,
-    search,
-    qerr,
-    max_files_per_trigger: int | None,
-    probe_panel: DataFrame | None = None,
-    probe_k: int = 5,
-) -> StreamingQuery:
-    """Shared skeleton of the incremental ANN flows: per micro-batch,
-    SEARCH the arriving vectors against the pre-epoch index, then ENCODE
-    them against the frozen auxiliary structure (codebooks / centroids)
-    and append epoch-partitioned codes + full-precision vectors.
-
-    ``train(batch) -> aux`` runs ONCE, on the first non-empty batch (both
-    trainers are fully deterministic, so a crash-replay regenerates
-    byte-identical aux — the overwrite is idempotent); ``encode(batch,
-    aux)`` emits the per-vector index rows (``code_cols`` schema);
-    ``search(batch, old_codes, old_vecs, aux)`` returns the per-query
-    top-k against state committed strictly before this epoch;
-    ``qerr(batch, aux) -> DataFrame[(id, qerr)]`` scores how well the
-    FROZEN aux still fits the arriving vectors.
-
-    Drift instrumentation: every epoch appends one health row
-    (``index_dir/health/epoch=N.json`` — epoch, n_vectors, mean_qerr,
-    baseline flag) where ``baseline`` marks the epoch that trained (or
-    retrained, see :func:`recode_epoch_index`) the aux.  Because the
-    train-once contract freezes codebooks/centroids on the first batch, a
-    distribution-shifted stream degrades recall with NO error anywhere —
-    mean quantization error is the observable proxy (rising qerr ⇒ the
-    frozen cells no longer sit near arriving vectors ⇒ ADC/probe rankings
-    blur).  ``ann_ingest_health`` reads these rows and flags drifted
-    epochs; ``recode_epoch_index`` refreshes the aux without violating
-    replay safety.  The row write is driver-side and deterministic, so a
-    crash-replay overwrites it byte-identically.
-
-    Recall instrumentation (VERDICT r11 #6): with ``probe_panel`` (a
-    FROZEN (id_col, vec_col) query panel — freeze it before starting the
-    stream; a panel that drifts makes rounds incomparable) each epoch also
-    runs the approximate search for the panel against the POST-epoch
-    snapshot (epochs ≤ N) and compares it to the exact cosine
-    top-``probe_k`` over the same snapshot vectors: ``recall`` = matched
-    exact pairs / exact pairs, recorded in the health row beside qerr.
-    This is the DIRECT quality tripwire — qerr is a proxy; panel recall
-    is what a search user experiences.  Pass ``probe_k`` equal to the
-    search's own k so the two rankings are set-comparable.  Cost per
-    epoch: one broadcast-panel approx search + one exact scan of the
-    snapshot — bounded by the panel size, not the stream.
-    """
-    ensure_runtime_confs(spark)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(src_dir)
-    aux_dir = os.path.join(index_dir, "aux")
-    # panel size is a constant of the stream — count it ONCE here, not one
-    # Spark job per epoch inside the sink
-    panel_n = probe_panel.count() if probe_panel is not None else 0
-
-    def _sink(bdf: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        batch = bdf.select(F.col(id_col), F.col(vec_col)).filter(
-            F.col(vec_col).isNotNull()
-        )
-        if not batch.head(1):
-            return
-        # Train-once gate keyed on the DURABLE trained-epoch marker, not
-        # on whether a read succeeds: a transient read failure in a later
-        # epoch (or a partially-written aux dir after a crash mid-train,
-        # which can still read "successfully") must NOT silently retrain
-        # on the current batch — that would freeze aux that disagrees
-        # with every code already encoded in the index.  Marker absent ⇒
-        # train (idempotent: trainers are deterministic and the overwrite
-        # replaces any partial files) and record WHICH epoch trained;
-        # marker present ⇒ aux is complete, so any read error below fails
-        # the batch loudly for a retry.  The marker is written atomically
-        # AFTER the aux commit, so a crash anywhere in the window simply
-        # replays the (cheap, deterministic) training.  Persisting the
-        # training epoch also keeps the health row's baseline flag stable
-        # under crash-replay: recomputing "did I train?" per attempt
-        # would mark the replayed training epoch baseline=False and
-        # permanently blind the drift monitor.
-        if _read_trained_epoch(aux_dir) is None:
-            codes_root = os.path.join(index_dir, "codes")
-            if os.path.isdir(codes_root) and any(
-                n.startswith("epoch=") for n in os.listdir(codes_root)
-            ):
-                # encoded epochs exist but training never completed: a
-                # recode crashed mid-swap (or aux was externally damaged).
-                # Retraining on THIS batch would freeze aux that disagrees
-                # with every existing code — fail loud; re-running the
-                # recode repairs the index deterministically.
-                raise RuntimeError(
-                    "ANN index has encoded epochs but no completed aux "
-                    f"(missing {_trained_epoch_path(aux_dir)}): re-run "
-                    "recode_*_index before restarting the stream"
-                )
-            train(batch).write.mode("overwrite").parquet(aux_dir)
-            _write_trained_epoch(aux_dir, epoch_id)
-        aux = spark.read.parquet(aux_dir)
-
-        old_codes = _index_before_epoch(
-            spark, os.path.join(index_dir, "codes"), epoch_id, id_col, *code_cols
-        )
-        old_vecs = _index_before_epoch(
-            spark, os.path.join(index_dir, "vecs"), epoch_id, id_col, vec_col
-        )
-        if old_codes is not None and old_codes.head(1):
-            search(batch, old_codes, old_vecs, aux).coalesce(1).write.mode(
-                "overwrite"
-            ).json(os.path.join(out_dir, f"epoch={epoch_id}"))
-        encode(batch, aux).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "codes", f"epoch={epoch_id}")
-        )
-        batch.write.mode("overwrite").parquet(
-            os.path.join(index_dir, "vecs", f"epoch={epoch_id}")
-        )
-        stats = qerr(batch, aux).agg(
-            F.count("*").alias("n"), F.avg("qerr").alias("mean_qerr")
-        ).head()
-        recall, n_probe = None, 0
-        if probe_panel is not None:
-            from logspout_kinesis_tests_spark.operators.similarity import (
-                cosine_topk,
-            )
-
-            snap_codes = _index_before_epoch(
-                spark, os.path.join(index_dir, "codes"), epoch_id + 1,
-                id_col, *code_cols,
-            )
-            snap_vecs = _index_before_epoch(
-                spark, os.path.join(index_dir, "vecs"), epoch_id + 1,
-                id_col, vec_col,
-            )
-            if snap_codes is not None and snap_codes.head(1):
-                approx = search(probe_panel, snap_codes, snap_vecs, aux).select(
-                    "query_id", F.col(id_col)
-                )
-                exact = cosine_topk(
-                    probe_panel.select(
-                        F.col(id_col).alias("query_id"), F.col(vec_col)
-                    ),
-                    snap_vecs,
-                    k=probe_k,
-                    corpus_id=id_col,
-                    vec_col=vec_col,
-                ).select("query_id", F.col(id_col))
-                exact = exact.localCheckpoint(eager=True)  # 2 consumers
-                n_exact = exact.count()
-                n_hit = exact.join(
-                    approx, ["query_id", id_col], "leftsemi"
-                ).count()
-                if n_exact:
-                    recall = n_hit / n_exact
-                    n_probe = panel_n
-        _write_health_row(
-            index_dir,
-            epoch_id,
-            n_vectors=int(stats["n"]),
-            mean_qerr=float(stats["mean_qerr"] or 0.0),
-            baseline=_read_trained_epoch(aux_dir) == epoch_id,
-            recall=recall,
-            n_probe=n_probe,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_pq_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    checkpoint_dir: str,
-    schema: StructType | str,
-    index_dir: str,
-    out_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    ksub: int = 16,
-    k: int = 5,
-    rerank: int = 50,
-    max_files_per_trigger: int | None = None,
-    probe_panel: DataFrame | None = None,
-) -> StreamingQuery:
-    """Incremental PQ-ANN index maintenance — the vector-stream member of
-    the persisted-index family (exact hashes / Bloom / MinHash / heavy
-    hitters → here).  Arriving vectors are (a) searched against the
-    PRE-batch index (streaming near-neighbor alerting: every new vector
-    reports its top-k existing neighbors), then (b) encoded against the
-    FROZEN codebooks with :func:`operators.ann.pq_encode` and appended —
-    the index grows per micro-batch with no retraining and no rebuild.
-
-    Index layout (epoch-partitioned like the dedup trio):
-
-    - ``index_dir/aux``             — codebooks, trained ONCE on the first
-      non-empty batch (``pq_index`` is deterministic, so a crash-replay of
-      the training batch regenerates byte-identical codebooks — the
-      overwrite is idempotent, same replay contract as everything else);
-    - ``index_dir/codes/epoch=N``   — (id, sub, code), m ints per vector;
-    - ``index_dir/vecs/epoch=N``    — full-precision vectors, read ONLY by
-      the top-``rerank`` exact re-rank stage.
-
-    Search probes ``epoch < N`` codes (the replay-safety core: a replayed
-    batch never sees its own partial writes), so results for an epoch are
-    reproducible regardless of crashes.  100 TB: per-batch cost is one
-    broadcast-ADC scan over the codes table + a ``rerank``-bounded join to
-    vecs; the codes payload is m bytes/vector, and ``compact_epoch_index``
-    folds old epochs exactly as for the dedup indexes.
-    """
-    from pyspark.sql import functions as F
-
-    from logspout_kinesis_tests_spark.operators.ann import (
-        pq_encode,
-        pq_index,
-        pq_quantization_error,
-        pq_topk,
-    )
-
-    return _streaming_ann_ingest(
-        spark, src_dir, checkpoint_dir, schema, index_dir, out_dir,
-        id_col, vec_col, ["sub", "code"],
-        train=lambda b: pq_index(
-            b, m=m, ksub=ksub, iters=1, corpus_id=id_col, vec_col=vec_col
-        )[1],
-        encode=lambda b, cb: pq_encode(b, cb, corpus_id=id_col, vec_col=vec_col),
-        search=lambda b, oc, ov, cb: pq_topk(
-            b.select(F.col(id_col).alias("query_id"), vec_col),
-            ov, k=k, m=m, ksub=ksub, rerank=rerank,
-            corpus_id=id_col, vec_col=vec_col, index=(oc, cb),
-        ),
-        qerr=lambda b, cb: pq_quantization_error(
-            b, cb, corpus_id=id_col, vec_col=vec_col
-        ),
-        max_files_per_trigger=max_files_per_trigger,
-        probe_panel=probe_panel,
-        probe_k=k,
-    )
-
-
-def streaming_ivf_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    checkpoint_dir: str,
-    schema: StructType | str,
-    index_dir: str,
-    out_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 16,
-    nprobe: int = 4,
-    k: int = 5,
-    max_files_per_trigger: int | None = None,
-    probe_panel: DataFrame | None = None,
-) -> StreamingQuery:
-    """Incremental IVF index maintenance — the inverted-file twin of
-    :func:`streaming_pq_ingest` on the same skeleton: centroids train once
-    on the first batch, arriving vectors are searched against the
-    pre-epoch inverted file (``ivf_topk`` probe join, ``epoch < N``), then
-    assigned to the frozen centroids with :func:`operators.ann.ivf_assign`
-    and appended as ``(id, cell)`` rows.  Same epoch-partitioned layout,
-    same crash-replay contract, same ``compact_epoch_index`` maintenance.
-    """
-    from pyspark.sql import functions as F
-
-    from logspout_kinesis_tests_spark.operators.ann import (
-        ivf_assign,
-        ivf_index,
-        ivf_quantization_error,
-        ivf_topk,
-    )
-
-    return _streaming_ann_ingest(
-        spark, src_dir, checkpoint_dir, schema, index_dir, out_dir,
-        id_col, vec_col, ["cell"],
-        train=lambda b: ivf_index(
-            b, nlist=nlist, iters=2, corpus_id=id_col, vec_col=vec_col
-        )[1],
-        encode=lambda b, cents: ivf_assign(
-            b, cents, corpus_id=id_col, vec_col=vec_col
-        ),
-        search=lambda b, oc, ov, cents: ivf_topk(
-            b.select(F.col(id_col).alias("query_id"), vec_col),
-            ov, k=k, nlist=nlist, nprobe=nprobe,
-            corpus_id=id_col, vec_col=vec_col, index=(oc, cents),
-        ),
-        qerr=lambda b, cents: ivf_quantization_error(
-            b, cents, corpus_id=id_col, vec_col=vec_col
-        ),
-        max_files_per_trigger=max_files_per_trigger,
-        probe_panel=probe_panel,
-        probe_k=k,
-    )
-
-
-def recode_epoch_index(
-    spark: SparkSession,
-    index_dir: str,
-    upto_epoch: int,
-    train,
-    encode,
-    qerr,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Retrain-and-recode maintenance for a streaming ANN index: rebuild
-    the frozen aux (codebooks / centroids) from ALL vectors accumulated in
-    epochs ``< upto_epoch``, re-encode every one of them against the new
-    aux, and fold the result into the single partition
-    ``epoch = upto_epoch - 1`` — the refresh to run when
-    :func:`ann_ingest_health` flags drift.
-
-    Replay safety, same rules as :func:`compact_epoch_index`: run only
-    while the stream is quiesced and with ``upto_epoch <=`` last COMMITTED
-    epoch + 1.  The folded partition id keeps every recoded row visible to
-    exactly the probes that saw it before (live epochs are
-    ``>= upto_epoch``), and a restarted stream reads the retrained aux
-    through the same ``_SUCCESS`` gate — new arrivals encode against the
-    refreshed codebooks with no contract change.
-
-    Crash handling: every artifact is staged before any destructive step
-    (aux under ``_aux_retrain``, codes under a Spark-hidden
-    ``_recode_tmp``), and the whole job is deterministic in its inputs
-    (the trainer is deterministic, the vecs table is quiesced) — so after
-    a crash at ANY point, re-running the same call regenerates identical
-    artifacts and completes the swap.  Re-run before restarting the
-    stream, exactly like a crashed compaction.
-
-    Writes a fresh BASELINE health row for the folded epoch, so the drift
-    monitor's comparison resets to the retrained aux.
-
-    Returns the number of recoded code rows.
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    aux_dir = os.path.join(index_dir, "aux")
-    codes_dir = os.path.join(index_dir, "codes")
-    vecs_dir = os.path.join(index_dir, "vecs")
-    # staging dirs are keyed by the target epoch, and stale staging from a
-    # DIFFERENT epoch's crashed recode is discarded on entry — a completed
-    # _aux_retrain left by recode(5) must never be adopted by recode(50)
-    # (its aux was trained on a fraction of the corpus); the source data
-    # for any staging dir is still present until the swap, so dropping
-    # stale ones loses nothing
-    aux_tmp = os.path.join(index_dir, f"_aux_retrain_{upto_epoch - 1}")
-    codes_tmp = os.path.join(codes_dir, f"_recode_tmp_{upto_epoch - 1}")
-    for base, keep in ((index_dir, "_aux_retrain_"), (codes_dir, "_recode_tmp_")):
-        if not os.path.isdir(base):
-            continue
-        for name in os.listdir(base):
-            if name.startswith(keep) and os.path.join(base, name) not in (
-                aux_tmp,
-                codes_tmp,
-            ):
-                shutil.rmtree(os.path.join(base, name))
-
-    vecs = (
-        spark.read.parquet(vecs_dir)
-        .filter(F.col("epoch") < upto_epoch)
-        .select(F.col(id_col), F.col(vec_col))
-        .distinct()
-    )
-
-    # stage 1: retrain on the full accumulated corpus; the trained-epoch
-    # marker is (re)written unconditionally so it travels with the swap
-    # even when a re-run skips the completed staging write
-    if not os.path.exists(os.path.join(aux_tmp, "_SUCCESS")):
-        if os.path.isdir(aux_tmp):
-            shutil.rmtree(aux_tmp)  # partial from a crashed run
-        train(vecs).write.parquet(aux_tmp)
-    _write_trained_epoch(aux_tmp, upto_epoch - 1)
-    new_aux = spark.read.parquet(aux_tmp)
-
-    # stage 2: re-encode every accumulated vector against the new aux
-    if not os.path.exists(os.path.join(codes_tmp, "_SUCCESS")):
-        if os.path.isdir(codes_tmp):
-            shutil.rmtree(codes_tmp)
-        encode(vecs, new_aux).write.parquet(codes_tmp)
-
-    # swap aux first: a restarted stream MUST see the aux the staged codes
-    # were built against (old aux + new codes would mis-rank every ADC
-    # probe; new aux + old codes is the pre-existing drift, no worse, and
-    # the codes swap directly below replaces them)
-    if os.path.isdir(aux_dir):  # absent when re-running after a crash
-        shutil.rmtree(aux_dir)    # that died between rmtree and rename
-    os.rename(aux_tmp, aux_dir)
-    # health stats BEFORE the vecs fold: the lazy `vecs` plan still reads
-    # the per-epoch dirs, which the compaction below deletes
-    stats = qerr(vecs, spark.read.parquet(aux_dir)).agg(
-        F.count("*").alias("n"), F.avg("qerr").alias("mean_qerr")
-    ).head()
-    for name in os.listdir(codes_dir):
-        if name.startswith("epoch="):
-            try:
-                if int(name.split("=", 1)[1]) < upto_epoch:
-                    shutil.rmtree(os.path.join(codes_dir, name))
-            except ValueError:
-                continue
-    os.rename(codes_tmp, os.path.join(codes_dir, f"epoch={upto_epoch - 1}"))
-    # vecs are unchanged by the recode — fold them with the standard
-    # membership compaction so the epoch layout matches the codes table
-    compact_epoch_index(spark, vecs_dir, upto_epoch)
-    _write_health_row(
-        index_dir,
-        upto_epoch - 1,
-        n_vectors=int(stats["n"]),
-        mean_qerr=float(stats["mean_qerr"] or 0.0),
-        baseline=True,
-    )
-    return spark.read.parquet(
-        os.path.join(codes_dir, f"epoch={upto_epoch - 1}")
-    ).count()
-
-
-def recode_pq_index(
-    spark: SparkSession,
-    index_dir: str,
-    upto_epoch: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    ksub: int = 16,
-) -> int:
-    """:func:`recode_epoch_index` with the PQ lifecycle's own train/encode
-    (same parameters as :func:`streaming_pq_ingest` — pass the ones the
-    stream was started with)."""
-    from logspout_kinesis_tests_spark.operators.ann import (
-        pq_encode,
-        pq_index,
-        pq_quantization_error,
-    )
-
-    return recode_epoch_index(
-        spark, index_dir, upto_epoch,
-        train=lambda b: pq_index(
-            b, m=m, ksub=ksub, iters=1, corpus_id=id_col, vec_col=vec_col
-        )[1],
-        encode=lambda b, cb: pq_encode(b, cb, corpus_id=id_col, vec_col=vec_col),
-        qerr=lambda b, cb: pq_quantization_error(
-            b, cb, corpus_id=id_col, vec_col=vec_col
-        ),
-        id_col=id_col, vec_col=vec_col,
-    )
-
-
-def recode_ivf_index(
-    spark: SparkSession,
-    index_dir: str,
-    upto_epoch: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 16,
-) -> int:
-    """:func:`recode_epoch_index` with the IVF lifecycle's own
-    train/encode (parameters as :func:`streaming_ivf_ingest`)."""
-    from logspout_kinesis_tests_spark.operators.ann import (
-        ivf_assign,
-        ivf_index,
-        ivf_quantization_error,
-    )
-
-    return recode_epoch_index(
-        spark, index_dir, upto_epoch,
-        train=lambda b: ivf_index(
-            b, nlist=nlist, iters=2, corpus_id=id_col, vec_col=vec_col
-        )[1],
-        encode=lambda b, cents: ivf_assign(
-            b, cents, corpus_id=id_col, vec_col=vec_col
-        ),
-        qerr=lambda b, cents: ivf_quantization_error(
-            b, cents, corpus_id=id_col, vec_col=vec_col
-        ),
-        id_col=id_col, vec_col=vec_col,
-    )

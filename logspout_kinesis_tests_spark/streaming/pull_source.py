@@ -121,10 +121,16 @@ class FileShardClient:
     sorted files, so appending a new file extends the stream without
     renumbering — the file-system analogue of a shard's monotone sequence.
     Readable from any process (executors run in separate workers).
+
+    Per-file record counts are cached by (size, mtime_ns): a counted file
+    that lies wholly before a call's first record is skipped unopened, and
+    a call parses only the records it returns.  A rewritten file is
+    recounted.
     """
 
     def __init__(self, root: str):
         self.root = root
+        self._counts: dict[str, tuple[int, int, int]] = {}
 
     def _shard_dir(self, shard_id: str) -> str:
         return os.path.join(self.root, shard_id)
@@ -137,11 +143,39 @@ class FileShardClient:
             os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".jsonl")
         ]
 
-    def _records(self, shard_id: str) -> list[dict]:
-        out = []
-        for path in self._files(shard_id):
+    def _count(self, path: str) -> int:
+        st = os.stat(path)
+        key = (st.st_size, st.st_mtime_ns)
+        hit = self._counts.get(path)
+        if hit is None or hit[:2] != key:
             with open(path) as f:
-                out.extend(json.loads(line) for line in f if line.strip())
+                hit = (*key, sum(1 for line in f if line.strip()))
+            self._counts[path] = hit
+        return hit[2]
+
+    def _length(self, shard_id: str) -> int:
+        return sum(self._count(p) for p in self._files(shard_id))
+
+    def _page(self, shard_id: str, seq: int, limit: int) -> list[dict]:
+        """Records ``[seq, seq + limit)``; earlier lines are skipped unparsed."""
+        out: list[dict] = []
+        for path in self._files(shard_id):
+            if len(out) >= limit:
+                break
+            n = self._count(path)
+            if seq >= n:
+                seq -= n
+                continue
+            with open(path) as f:
+                for line in f:
+                    if not line.strip():
+                        continue
+                    if seq:
+                        seq -= 1
+                    elif len(out) < limit:
+                        out.append(json.loads(line))
+                    else:
+                        break
         return out
 
     def list_shards(self, stream: str) -> list[str]:
@@ -151,7 +185,7 @@ class FileShardClient:
         )
 
     def latest_sequences(self, stream: str) -> dict[str, int]:
-        return {s: len(self._records(s)) for s in self.list_shards(stream)}
+        return {s: self._length(s) for s in self.list_shards(stream)}
 
     def get_shard_iterator(
         self,
@@ -163,7 +197,7 @@ class FileShardClient:
         if position == "TRIM_HORIZON":
             seq = 0
         elif position == "LATEST":
-            seq = len(self._records(shard_id))
+            seq = self._length(shard_id)
         elif position == "AT_SEQUENCE_NUMBER":
             seq = int(sequence_number or 0)
         elif position == "AFTER_SEQUENCE_NUMBER":
@@ -178,8 +212,7 @@ class FileShardClient:
     def get_records(self, iterator: str, limit: int = DEFAULT_FETCH_LIMIT) -> dict:
         state = json.loads(iterator)
         shard, seq = state["shard"], state["seq"]
-        records = self._records(shard)
-        batch = records[seq : seq + limit]
+        batch = self._page(shard, seq, limit)
         next_seq = seq + len(batch)
         return {
             "Records": [
@@ -317,13 +350,11 @@ class _PullStreamReader(DataSourceStreamReader):
             # restarted from a checkpoint: drain the backlog uncapped
             end = {s: int(n) for s, n in latest.items()}
         else:
+            # a shard missing from _current is newly discovered: it starts at 0
             end = {
                 s: min(int(n), self._current.get(s, 0) + self.fetch_limit)
                 for s, n in latest.items()
             }
-            # newly discovered shards start from zero
-            for s in latest:
-                end.setdefault(s, min(int(latest[s]), self.fetch_limit))
         self._current = {
             s: max(end.get(s, 0), (self._current or {}).get(s, 0)) for s in end
         }

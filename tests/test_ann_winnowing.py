@@ -731,29 +731,18 @@ def test_pq_encode_rejects_wrong_dimension(spark):
 
 
 def test_pq_geometry_guard_null_and_qerr_consistency(spark):
-    """The encode and drift-scoring paths share ONE malformed-input
-    contract: pq_quantization_error raises the same loud geometry error
-    as pq_encode (it must not silently shrink the health sample), and a
-    NULL embedding produces a READABLE message (length -1), not a
-    raise_error(NULL) that kills the batch with no diagnostics."""
+    """A NULL embedding fails pq_encode's geometry guard with a READABLE
+    message (length -1), not a raise_error(NULL) that kills the batch with
+    no diagnostics."""
     import pytest
 
-    from logspout_kinesis_tests_spark.operators.ann import (
-        pq_encode,
-        pq_index,
-        pq_quantization_error,
-    )
+    from logspout_kinesis_tests_spark.operators.ann import pq_encode, pq_index
 
     train = spark.createDataFrame(
         [(i, [float((i * 7 + d) % 5) for d in range(8)]) for i in range(16)],
         "vec_id long, embedding array<double>",
     )
     _, codebooks = pq_index(train, m=4, ksub=4, iters=1)
-    short = spark.createDataFrame(
-        [(101, [1.0] * 6)], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="pq_quantization_error"):
-        pq_quantization_error(short, codebooks).count()
     null_vec = spark.createDataFrame(
         [(102, None)], "vec_id long, embedding array<double>"
     )

@@ -182,6 +182,48 @@ def test_file_shard_client_contract(tmp_path):
     assert [r["Data"] for r in c.get_records(it_seek, 10)["Records"]] == ["b", "c"]
 
 
+def test_file_shard_client_parses_each_record_once(tmp_path, monkeypatch):
+    """A page-by-page drain parses every record line exactly once (earlier
+    lines are skipped unparsed, file sizes come from cached counts), and a
+    file rewritten in place is recounted."""
+    root = str(tmp_path / "shards")
+    names = ("0000.jsonl", "0001.jsonl", "0002.jsonl")
+    for fi, name in enumerate(names):
+        _write_shard_file(root, "shard-000", name,
+                          [(f"m-{fi}-{i}", "k") for i in range(4)])
+    c = FileShardClient(root)
+
+    parsed: list[str] = []
+    real_loads = json.loads
+
+    def spy(s, *args, **kwargs):
+        out = real_loads(s, *args, **kwargs)
+        if isinstance(out, dict) and "data" in out:
+            parsed.append(out["data"])
+        return out
+
+    monkeypatch.setattr(json, "loads", spy)
+    it = c.get_shard_iterator("s", "shard-000", "TRIM_HORIZON")
+    got = []
+    while True:
+        assert c.latest_sequences("s") == {"shard-000": 12}
+        out = c.get_records(it, limit=3)
+        if not out["Records"]:
+            break
+        got.extend((r["SequenceNumber"], r["Data"]) for r in out["Records"])
+        it = out["NextShardIterator"]
+    expected = [f"m-{fi}-{i}" for fi in range(3) for i in range(4)]
+    assert got == list(enumerate(expected))
+    assert parsed == expected  # each record line parsed once, in order
+
+    # rewrite the middle file in place with one record: later records
+    # renumber and the tip moves back
+    _write_shard_file(root, "shard-000", names[1], [("x", "k")])
+    assert c.latest_sequences("s") == {"shard-000": 9}
+    it = c.get_shard_iterator("s", "shard-000", "AT_SEQUENCE_NUMBER", 4)
+    assert [r["Data"] for r in c.get_records(it, limit=2)["Records"]] == ["x", "m-2-0"]
+
+
 def test_consume_pipeline_runs(spark, tmp_path, shard_root):
     from logspout_kinesis_tests_spark.streaming.pipeline import consume_pipeline
 

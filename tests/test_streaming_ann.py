@@ -1,19 +1,15 @@
-"""Streaming ANN index maintenance (`streaming_pq_ingest`): incremental
-encode-and-append against frozen codebooks, search-before-extend against
-the pre-batch index, and the family's crash-replay contract."""
+"""ANN index compaction (`compact_ann_index`): the epoch-partitioned
+codes + vecs fragments of a PQ index fold table by table through the
+staged-swap fold, and a kill between or inside the folds heals on re-run.
+Each test builds its index by hand with ``pq_encode``."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import time
 
 import pytest as _pytest_mark_mod
 
 pytestmark = _pytest_mark_mod.mark.slow
-
-from logspout_kinesis_tests_spark.streaming.batch_apply import streaming_pq_ingest
 
 DIM = 8
 SCHEMA = "vec_id long, embedding array<double>"
@@ -23,582 +19,6 @@ def _vec(seed: int) -> list[float]:
     # deterministic, well-separated vectors (distinct dominant axes)
     return [1.0 if d == seed % DIM else 0.1 * ((seed * 7 + d) % 5) for d in range(DIM)]
 
-
-def _write_batch(src: str, name: str, rows: list[tuple[int, list[float]]], t: int) -> None:
-    path = os.path.join(src, name)
-    with open(path, "w") as f:
-        for vid, emb in rows:
-            f.write(json.dumps({"vec_id": vid, "embedding": emb}) + "\n")
-    os.utime(path, (t, t))
-
-
-def _run(spark, src, ckpt, index, out) -> None:
-    q = streaming_pq_ingest(
-        spark, src, ckpt, SCHEMA, index, out,
-        m=4, ksub=4, k=3, rerank=10, max_files_per_trigger=1,
-    )
-    assert q.awaitTermination(180)
-    while any(a.id == q.id for a in spark.streams.active):
-        time.sleep(0.1)
-
-
-def _epoch_hits(out: str, epoch: int) -> list[dict]:
-    rows = []
-    for p in glob.glob(os.path.join(out, f"epoch={epoch}", "part-*.json")):
-        with open(p) as f:
-            rows.extend(json.loads(line) for line in f if line.strip())
-    return rows
-
-
-def test_pq_ingest_searches_then_extends(spark, tmp_path):
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    base = [(i, _vec(i)) for i in range(8)]
-    _write_batch(src, "b0.json", base, 1_700_000_000)
-    # batch 1: a near-copy of base vector 3 (first component scaled) and a
-    # genuinely novel vector
-    near3 = list(_vec(3))
-    near3[0] *= 1.02
-    _write_batch(src, "b1.json", [(100, near3), (101, _vec(20))], 1_700_000_060)
-
-    _run(spark, src, ckpt, index, out)
-
-    # epoch 0 trains the codebooks and seeds the index — no search output
-    assert not os.path.isdir(os.path.join(out, "epoch=0"))
-    assert os.path.isdir(os.path.join(index, "aux"))  # frozen codebooks
-    # epoch 1 searched the PRE-batch index: the near-copy's top-1 is its twin
-    hits = _epoch_hits(out, 1)
-    assert {h["query_id"] for h in hits} == {100, 101}
-    top = {h["query_id"]: h for h in hits if h["rank"] == 1}
-    assert top[100]["vec_id"] == 3
-    assert top[100]["cosine"] > 0.999
-    # every batch-1 query only sees pre-batch corpus ids (never 100/101)
-    assert all(h["vec_id"] < 100 for h in hits)
-
-    # the index extended: codes exist for both epochs, m rows per vector
-    codes = spark.read.parquet(os.path.join(index, "codes"))
-    assert codes.count() == (8 + 2) * 4
-    vecs = spark.read.parquet(os.path.join(index, "vecs"))
-    assert vecs.count() == 10
-
-    # batch 2 arrives later: a near-copy of the NOVEL batch-1 vector — it
-    # must be found, proving the incremental extension is searchable
-    _write_batch(src, "b2.json", [(200, [x * 1.01 for x in _vec(20)])], 1_700_000_120)
-    _run(spark, src, ckpt, index, out)
-    hits2 = {h["rank"]: h for h in _epoch_hits(out, 2)}
-    assert hits2[1]["vec_id"] == 101 and hits2[1]["cosine"] > 0.999
-
-
-def test_pq_ingest_replay_regenerates_epoch(spark, tmp_path):
-    """Crash after the epoch's index write but before the commit: the
-    replayed epoch probes only ``epoch < N`` so its search output and
-    index writes regenerate byte-identically."""
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    near = list(_vec(5))
-    near[0] *= 1.02
-    _write_batch(src, "b1.json", [(100, near)], 1_700_000_060)
-    _run(spark, src, ckpt, index, out)
-
-    first = sorted(
-        json.dumps(h, sort_keys=True) for h in _epoch_hits(out, 1)
-    )
-    assert first
-    # emulate the crash: epoch-1 index writes are on disk, commit is not
-    commits = sorted(
-        p
-        for p in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if "." not in os.path.basename(p)
-    )
-    last = commits[-1]
-    os.remove(last)
-    crc = os.path.join(os.path.dirname(last), f".{os.path.basename(last)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    _run(spark, src, ckpt, index, out)
-    replayed = sorted(
-        json.dumps(h, sort_keys=True) for h in _epoch_hits(out, 1)
-    )
-    assert replayed == first, "replayed epoch self-shadowed or diverged"
-    # no duplicate index rows after the replay (per-epoch overwrite)
-    codes = spark.read.parquet(os.path.join(index, "codes"))
-    assert codes.count() == 9 * 4
-    assert codes.select("vec_id", "sub").distinct().count() == 9 * 4
-
-
-def test_pq_ingest_composes_with_epoch_compaction(spark, tmp_path):
-    """`compact_ann_index` folds the PQ index's epochs (codes + vecs in one
-    call) while the stream is quiesced; the next increment's search results
-    are identical to the uncompacted run (the fold keeps every row visible
-    to epoch<N probes)."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_ann_index,
-    )
-
-    def run_flow(root: str, compact: bool) -> list[str]:
-        src, ckpt, index, out = (
-            os.path.join(root, d) for d in ("src", "ckpt", "idx", "out")
-        )
-        os.makedirs(src)
-        _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-        _write_batch(src, "b1.json", [(50, _vec(21))], 1_700_000_060)
-        _run(spark, src, ckpt, index, out)
-        if compact:
-            folded = compact_ann_index(spark, index, upto_epoch=2)
-            assert folded == {"codes": 9 * 4, "vecs": 9}
-            for sub in ("codes", "vecs"):
-                eps = {
-                    n for n in os.listdir(os.path.join(index, sub))
-                    if n.startswith("epoch=")
-                }
-                assert eps == {"epoch=1"}
-        near = [x * 1.01 for x in _vec(21)]
-        _write_batch(src, "b2.json", [(200, near)], 1_700_000_120)
-        _run(spark, src, ckpt, index, out)
-        return sorted(
-            json.dumps(h, sort_keys=True) for h in _epoch_hits(out, 2)
-        )
-
-    plain = run_flow(str(tmp_path / "plain"), compact=False)
-    compacted = run_flow(str(tmp_path / "compacted"), compact=True)
-    assert plain and compacted == plain
-    top = [json.loads(h) for h in compacted if json.loads(h)["rank"] == 1]
-    assert top[0]["vec_id"] == 50
-
-
-def test_ivf_ingest_searches_then_extends(spark, tmp_path):
-    """The IVF twin on the shared skeleton: centroids train once, arriving
-    vectors probe the pre-epoch inverted file, assignments append — and an
-    increment-then-search round trip finds a near-copy planted across the
-    micro-batch boundary."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        streaming_ivf_ingest,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    near = list(_vec(3))
-    near[0] *= 1.02
-    _write_batch(src, "b1.json", [(100, near), (101, _vec(20))], 1_700_000_060)
-
-    def run():
-        q = streaming_ivf_ingest(
-            spark, src, ckpt, SCHEMA, index, out,
-            nlist=4, nprobe=2, k=3, max_files_per_trigger=1,
-        )
-        assert q.awaitTermination(180)
-        while any(a.id == q.id for a in spark.streams.active):
-            time.sleep(0.1)
-
-    run()
-    hits = _epoch_hits(out, 1)
-    top = {h["query_id"]: h for h in hits if h["rank"] == 1}
-    assert top[100]["vec_id"] == 3 and top[100]["cosine"] > 0.999
-    assert all(h["vec_id"] < 100 for h in hits)
-    codes = spark.read.parquet(os.path.join(index, "codes"))
-    assert codes.count() == 10 and set(codes.columns) >= {"vec_id", "cell"}
-
-    # increment is searchable: a near-copy of the batch-1 novel vector
-    _write_batch(src, "b2.json", [(200, [x * 1.01 for x in _vec(20)])], 1_700_000_120)
-    run()
-    hits2 = {h["rank"]: h for h in _epoch_hits(out, 2)}
-    assert hits2[1]["vec_id"] == 101 and hits2[1]["cosine"] > 0.999
-
-
-def test_aux_gate_is_the_trained_marker_not_readability(spark, tmp_path):
-    """The train-once gate trusts ONLY the durable trained-epoch marker: a
-    partially-written aux dir after a crash mid-train can still READ
-    successfully, and a readability gate would adopt those wrong codebooks
-    for every future code.  With the marker gate, marker-absent aux is
-    retrained (idempotent — deterministic trainer) no matter what partial
-    files sit there."""
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    base = [(i, _vec(i)) for i in range(8)]
-    _write_batch(src, "b0.json", base, 1_700_000_000)
-    near3 = list(_vec(3))
-    near3[0] *= 1.02
-    _write_batch(src, "b1.json", [(100, near3)], 1_700_000_060)
-
-    # crash-mid-train emulation: a VALID but WRONG codebooks parquet is
-    # already in aux, with no _SUCCESS marker (the committer writes the
-    # marker last, so a partial dir never has one)
-    from logspout_kinesis_tests_spark.operators.ann import pq_index
-
-    junk = spark.createDataFrame(
-        [(i, [float(i)] * DIM) for i in range(4)],
-        "vec_id long, embedding array<double>",
-    )
-    _, wrong_cb = pq_index(junk, m=4, ksub=4, iters=1)
-    aux = os.path.join(index, "aux")
-    wrong_cb.write.parquet(aux)  # no _TRAINED_EPOCH: training "never completed"
-
-    _run(spark, src, ckpt, index, out)
-
-    # the partial aux was replaced by a completed (marker-present) train
-    assert os.path.exists(os.path.join(aux, "_TRAINED_EPOCH"))
-    # and the index behaves exactly like the happy path: the near-copy's
-    # top-1 neighbor is its twin with ~1.0 cosine
-    top = {h["query_id"]: h for h in _epoch_hits(out, 1) if h["rank"] == 1}
-    assert top[100]["vec_id"] == 3 and top[100]["cosine"] > 0.999
-
-
-def test_recall_probe_writes_health_rows_per_epoch(spark, tmp_path):
-    """VERDICT r11 #6: with a frozen probe panel the ingest emits a recall
-    figure per epoch — approximate search of the panel vs exact cosine
-    top-k over the SAME post-epoch snapshot — beside the qerr proxy."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        ann_ingest_health,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(6)], 1_700_000_000)
-    _write_batch(src, "b1.json", [(10 + i, _vec(10 + i)) for i in range(4)], 1_700_000_060)
-    panel = spark.createDataFrame([(i, _vec(i)) for i in range(3)], SCHEMA)
-    q = streaming_pq_ingest(
-        spark, src, ckpt, SCHEMA, index, out,
-        m=4, ksub=4, k=3, rerank=10, max_files_per_trigger=1,
-        probe_panel=panel,
-    )
-    assert q.awaitTermination(180)
-    while any(a.id == q.id for a in spark.streams.active):
-        time.sleep(0.1)
-
-    rows = ann_ingest_health(index)
-    assert [r["epoch"] for r in rows] == [0, 1]
-    for r in rows:
-        assert 0.0 <= r["recall"] <= 1.0
-        assert r["n_probe"] == 3
-        assert r["recall_degraded"] is False
-    # the baseline epoch's snapshot IS the panel's home batch: the panel
-    # vectors are all present and well-separated — exact self-recovery
-    assert rows[0]["recall"] == 1.0
-
-
-def test_recall_rows_replay_byte_identically(spark, tmp_path):
-    """Crash-replay of an epoch regenerates its recall health row
-    byte-identically: the probe searches epochs <= N of an index whose
-    per-epoch writes are idempotent overwrites, so the recall figure is a
-    pure function of the (stable) epoch id."""
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(6)], 1_700_000_000)
-    _write_batch(src, "b1.json", [(10 + i, _vec(10 + i)) for i in range(4)], 1_700_000_060)
-    panel = spark.createDataFrame([(i, _vec(i)) for i in range(3)], SCHEMA)
-
-    def run():
-        q = streaming_pq_ingest(
-            spark, src, ckpt, SCHEMA, index, out,
-            m=4, ksub=4, k=3, rerank=10, max_files_per_trigger=1,
-            probe_panel=panel,
-        )
-        assert q.awaitTermination(180)
-        while any(a.id == q.id for a in spark.streams.active):
-            time.sleep(0.1)
-
-    run()
-    row_path = os.path.join(index, "health", "epoch=1.json")
-    with open(row_path) as f:
-        first = f.read()
-    assert '"recall"' in first
-    # crash: epoch-1 writes on disk, commit missing → replay on restart
-    commits = sorted(
-        p
-        for p in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if "." not in os.path.basename(p)
-    )
-    os.remove(commits[-1])
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
-    run()
-    with open(row_path) as f:
-        replayed = f.read()
-    assert replayed == first
-
-
-def test_recall_degradation_flagging_is_baseline_relative(tmp_path):
-    """ann_ingest_health flags an epoch whose panel recall fell below
-    recall_floor_ratio x the baseline epoch's; rows without recall (panel
-    not configured) never flag."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        _write_health_row,
-        ann_ingest_health,
-    )
-
-    index = str(tmp_path / "idx")
-    _write_health_row(index, 0, 10, 0.1, True, recall=0.9, n_probe=50)
-    _write_health_row(index, 1, 10, 0.1, False, recall=0.8, n_probe=50)
-    _write_health_row(index, 2, 10, 0.1, False, recall=0.5, n_probe=50)
-    _write_health_row(index, 3, 10, 0.1, False)  # no probe this epoch
-    rows = {r["epoch"]: r for r in ann_ingest_health(index, recall_floor_ratio=0.8)}
-    assert rows[0]["recall_degraded"] is False  # baseline never flags
-    assert rows[1]["recall_degraded"] is False  # 0.8 >= 0.8 * 0.9 - eps? no:
-    # 0.8 >= 0.72 → healthy
-    assert rows[2]["recall_degraded"] is True  # 0.5 < 0.72
-    assert rows[3]["recall_degraded"] is False  # no recall → no verdict
-
-
-def test_drift_monitor_flags_shifted_stream_and_recode_resets_it(spark, tmp_path):
-    """The train-once contract's honest gap, instrumented: a
-    distribution-shifted batch arrives, its mean quantization error
-    against the FROZEN codebooks explodes, and `ann_ingest_health` flags
-    the epoch — then `recode_pq_index` retrains on the full accumulated
-    corpus, re-encodes every vector, folds the epochs, and resets the
-    baseline, after which the stream continues against the refreshed aux."""
-    from logspout_kinesis_tests_spark.operators.ann import pq_encode
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        ann_ingest_health,
-        recode_pq_index,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    # a shifted distribution: same shapes, +25 on every component
-    shifted = [(100 + i, [x + 25.0 for x in _vec(i)]) for i in range(4)]
-    _write_batch(src, "b1.json", shifted, 1_700_000_060)
-    _run(spark, src, ckpt, index, out)
-
-    rows = ann_ingest_health(index, factor=10.0)
-    assert [r["epoch"] for r in rows] == [0, 1]
-    assert rows[0]["baseline"] and not rows[0]["drifted"]
-    assert rows[1]["drifted"] and rows[1]["mean_qerr"] > 100 * rows[0]["mean_qerr"]
-    drift_qerr = rows[1]["mean_qerr"]
-
-    # --- refresh: retrain on all 12 vectors, re-encode, fold to epoch=1
-    n = recode_pq_index(spark, index, upto_epoch=2, m=4, ksub=4)
-    assert n == 12 * 4
-    codes = spark.read.parquet(os.path.join(index, "codes"))
-    assert set(r["epoch"] for r in codes.select("epoch").distinct().collect()) == {1}
-    # stored codes EQUAL a fresh encode of the folded vectors vs the new aux
-    vecs = spark.read.parquet(os.path.join(index, "vecs"))
-    aux = spark.read.parquet(os.path.join(index, "aux"))
-    expect = {
-        (r["vec_id"], r["sub"], r["code"])
-        for r in pq_encode(vecs.select("vec_id", "embedding"), aux).collect()
-    }
-    got = {(r["vec_id"], r["sub"], r["code"]) for r in codes.collect()}
-    assert got == expect
-    # baseline reset: the folded epoch is the new comparison point
-    rows = ann_ingest_health(index, factor=10.0)
-    assert rows[-1]["epoch"] == 1 and rows[-1]["baseline"]
-    assert not rows[-1]["drifted"]
-    # the retrained cells fit the ACCUMULATED mixture: an order of
-    # magnitude under the error the frozen pre-recode codebooks scored
-    assert rows[-1]["mean_qerr"] < drift_qerr / 10
-
-    # re-running the same recode is idempotent (deterministic trainer,
-    # quiesced vecs): the codes regenerate identically
-    assert recode_pq_index(spark, index, upto_epoch=2, m=4, ksub=4) == 12 * 4
-    again = {
-        (r["vec_id"], r["sub"], r["code"])
-        for r in spark.read.parquet(os.path.join(index, "codes")).collect()
-    }
-    assert again == got
-
-    # --- the stream continues: a near-copy of a shifted vector arrives,
-    # is searched against the folded+recoded index, and encodes against
-    # the RETRAINED aux without tripping the (reset) drift monitor
-    near = [x * 1.01 for x in [y + 25.0 for y in _vec(2)]]
-    _write_batch(src, "b2.json", [(300, near)], 1_700_000_120)
-    _run(spark, src, ckpt, index, out)
-    hits = {h["rank"]: h for h in _epoch_hits(out, 2)}
-    assert hits[1]["vec_id"] == 102 and hits[1]["cosine"] > 0.999
-    rows = ann_ingest_health(index, factor=10.0)
-    assert rows[-1]["epoch"] == 2 and not rows[-1]["drifted"]
-
-
-def test_ivf_quantization_error_rises_with_shift(spark):
-    """The IVF drift signal, batch-level: vectors from the training
-    distribution score near-zero 1-cosine error against their centroids;
-    a shifted population scores an order of magnitude higher."""
-    from logspout_kinesis_tests_spark.operators.ann import (
-        ivf_index,
-        ivf_quantization_error,
-    )
-
-    train = spark.createDataFrame(
-        [(i, _vec(i)) for i in range(16)], "vec_id long, embedding array<double>"
-    )
-    _, cents = ivf_index(train, nlist=4, iters=2)
-    base_err = (
-        ivf_quantization_error(train, cents).agg({"qerr": "avg"}).head()[0]
-    )
-    # a direction no training vector points in: heavy negative components
-    shifted = spark.createDataFrame(
-        [(100 + i, [-(x + 5.0) for x in _vec(i)]) for i in range(4)],
-        "vec_id long, embedding array<double>",
-    )
-    shift_err = (
-        ivf_quantization_error(shifted, cents).agg({"qerr": "avg"}).head()[0]
-    )
-    assert shift_err > 5 * base_err
-
-
-def test_ivf_recode_roundtrip(spark, tmp_path):
-    """The IVF twin of the retrain-and-recode flow: after a shifted batch,
-    recode_ivf_index retrains centroids on the accumulated corpus, folds
-    the cells to one epoch byte-consistent with a fresh ivf_assign, resets
-    the health baseline, and the restarted stream keeps searching."""
-    from logspout_kinesis_tests_spark.operators.ann import ivf_assign
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        ann_ingest_health,
-        recode_ivf_index,
-        streaming_ivf_ingest,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    shifted = [(100 + i, [-(x + 5.0) for x in _vec(i)]) for i in range(4)]
-    _write_batch(src, "b1.json", shifted, 1_700_000_060)
-
-    def run():
-        q = streaming_ivf_ingest(
-            spark, src, ckpt, SCHEMA, index, out,
-            nlist=4, nprobe=2, k=3, max_files_per_trigger=1,
-        )
-        assert q.awaitTermination(180)
-        while any(a.id == q.id for a in spark.streams.active):
-            time.sleep(0.1)
-
-    run()
-    rows = ann_ingest_health(index, factor=5.0)
-    assert rows[0]["baseline"] and rows[1]["drifted"]
-
-    assert recode_ivf_index(spark, index, upto_epoch=2, nlist=4) == 12
-    vecs = spark.read.parquet(os.path.join(index, "vecs"))
-    aux = spark.read.parquet(os.path.join(index, "aux"))
-    expect = {
-        (r["vec_id"], r["cell"])
-        for r in ivf_assign(vecs.select("vec_id", "embedding"), aux).collect()
-    }
-    got = {
-        (r["vec_id"], r["cell"])
-        for r in spark.read.parquet(os.path.join(index, "codes")).collect()
-    }
-    assert got == expect
-    rows = ann_ingest_health(index, factor=5.0)
-    assert rows[-1]["epoch"] == 1 and rows[-1]["baseline"] and not rows[-1]["drifted"]
-
-    # stream continues: a near-copy of a shifted vector finds its twin in
-    # the folded, recoded inverted file
-    near = [x * 1.01 for x in [-(y + 5.0) for y in _vec(2)]]
-    _write_batch(src, "b2.json", [(300, near)], 1_700_000_120)
-    run()
-    hits = {h["rank"]: h for h in _epoch_hits(out, 2)}
-    assert hits[1]["vec_id"] == 102 and hits[1]["cosine"] > 0.999
-
-
-def _crash_commit(ckpt: str) -> None:
-    commits = sorted(
-        p
-        for p in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if "." not in os.path.basename(p)
-    )
-    last = commits[-1]
-    os.remove(last)
-    crc = os.path.join(os.path.dirname(last), f".{os.path.basename(last)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-
-def test_training_epoch_replay_keeps_baseline_flag(spark, tmp_path):
-    """Crash AFTER the training epoch's aux commit but before the
-    streaming commit: the replay must re-emit the health row with
-    baseline=True (the durable trained-epoch marker, not a per-attempt
-    'did I train?' recomputation — which would permanently blind the
-    drift monitor)."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        ann_ingest_health,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    _run(spark, src, ckpt, index, out)
-    assert ann_ingest_health(index)[0]["baseline"]
-
-    _crash_commit(ckpt)  # aux + codes are on disk, the commit is not
-    _run(spark, src, ckpt, index, out)
-    rows = ann_ingest_health(index)
-    assert [r["epoch"] for r in rows] == [0]
-    assert rows[0]["baseline"], "replayed training epoch lost its baseline flag"
-
-
-def test_codes_without_completed_aux_fails_loud(spark, tmp_path):
-    """Encoded epochs + missing trained-epoch marker = a recode crashed
-    mid-swap: the restarted stream must REFUSE to retrain on its own
-    batch (which would disagree with every existing code) and point at
-    the recode repair path."""
-    import pytest
-    import shutil
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        streaming_pq_ingest,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    _run(spark, src, ckpt, index, out)
-
-    shutil.rmtree(os.path.join(index, "aux"))  # the crashed-swap window
-    _write_batch(src, "b1.json", [(100, _vec(1))], 1_700_000_060)
-    q = streaming_pq_ingest(
-        spark, src, ckpt, SCHEMA, index, out,
-        m=4, ksub=4, k=3, rerank=10, max_files_per_trigger=1,
-    )
-    with pytest.raises(StreamingQueryException, match="recode"):
-        q.awaitTermination(180)
-        raise AssertionError("stream retrained over an inconsistent index")
-
-
-def test_recode_rerun_heals_half_swapped_index(spark, tmp_path):
-    """Crash between the aux swap and the codes swap leaves new aux over
-    old per-epoch codes; the documented recovery (re-run the same recode)
-    must converge to exactly the completed recode's codes."""
-    import shutil
-
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        recode_pq_index,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    _write_batch(src, "b1.json", [(100, _vec(9)), (101, _vec(10))], 1_700_000_060)
-    _run(spark, src, ckpt, index, out)
-
-    codes_dir = os.path.join(index, "codes")
-    backup = str(tmp_path / "codes_backup")
-    shutil.copytree(codes_dir, backup)
-
-    assert recode_pq_index(spark, index, upto_epoch=2, m=4, ksub=4) == 10 * 4
-    final = {
-        (r["vec_id"], r["sub"], r["code"], r["epoch"])
-        for r in spark.read.parquet(codes_dir).collect()
-    }
-
-    # emulate the mid-swap crash: retrained aux is installed, but the
-    # codes are still the OLD per-epoch layout
-    shutil.rmtree(codes_dir)
-    shutil.copytree(backup, codes_dir)
-    assert recode_pq_index(spark, index, upto_epoch=2, m=4, ksub=4) == 10 * 4
-    healed = {
-        (r["vec_id"], r["sub"], r["code"], r["epoch"])
-        for r in spark.read.parquet(codes_dir).collect()
-    }
-    assert healed == final
 
 def test_compact_ann_index_kill_between_table_folds(spark, tmp_path):
     """VERDICT r12 #6: compact_ann_index folds codes THEN vecs.  A kill
@@ -749,55 +169,3 @@ def test_compact_ann_index_skips_incomplete_tmp_only_dir(spark, tmp_path):
     # the incomplete tmp is left untouched (Spark-invisible; a later fold
     # that finds real partitions beside it cleans it up)
     assert os.listdir(vroot) == ["_compact_tmp_1"]
-
-
-def test_pq_ingest_replay_after_compaction(spark, tmp_path):
-    """Crash-replay ACROSS a compaction boundary: epochs < N are folded
-    while the stream is quiesced, then epoch N's commit is lost (crash
-    after index write, before checkpoint commit).  The replayed epoch
-    probes `epoch < N` — served by the FOLDED partition now — so its
-    search output regenerates byte-identically and the index holds no
-    duplicate rows."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_ann_index,
-    )
-
-    src, ckpt, index, out = (str(tmp_path / d) for d in ("src", "ckpt", "idx", "out"))
-    os.makedirs(src)
-    _write_batch(src, "b0.json", [(i, _vec(i)) for i in range(8)], 1_700_000_000)
-    near = list(_vec(5))
-    near[0] *= 1.02
-    _write_batch(src, "b1.json", [(100, near)], 1_700_000_060)
-    _run(spark, src, ckpt, index, out)
-
-    first = sorted(json.dumps(h, sort_keys=True) for h in _epoch_hits(out, 1))
-    assert first
-
-    # quiesced maintenance: fold the committed epochs 0..1 into epoch=1
-    folded = compact_ann_index(spark, index, upto_epoch=2)
-    assert folded == {"codes": 9 * 4, "vecs": 9}
-
-    # crash simulation: the post-compaction epoch's commit is the one we
-    # lose — write batch 2, run, then delete its commit and replay
-    _write_batch(src, "b2.json", [(200, [x * 1.01 for x in _vec(5)])], 1_700_000_120)
-    _run(spark, src, ckpt, index, out)
-    second = sorted(json.dumps(h, sort_keys=True) for h in _epoch_hits(out, 2))
-    assert second
-
-    commits = sorted(
-        p
-        for p in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if "." not in os.path.basename(p)
-    )
-    last = commits[-1]
-    os.remove(last)
-    crc = os.path.join(os.path.dirname(last), f".{os.path.basename(last)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    _run(spark, src, ckpt, index, out)
-    replayed = sorted(json.dumps(h, sort_keys=True) for h in _epoch_hits(out, 2))
-    assert replayed == second, "replay across the compaction boundary diverged"
-    codes = spark.read.parquet(os.path.join(index, "codes"))
-    assert codes.count() == 10 * 4
-    assert codes.select("vec_id", "sub").distinct().count() == 10 * 4

@@ -182,54 +182,6 @@ def test_streaming_incremental_dedup_fails_on_corrupt_index(spark, sf_dir, tmp_p
     assert not {i for i in emitted if i >= 1_000_000}
 
 
-def test_streaming_bloom_dedup_drops_cross_batch_copies(spark, sf_dir, tmp_path):
-    """Bloom-index variant: true duplicates are always dropped across
-    batches (no false negatives); at this tiny n vs m=2^20 the fp
-    probability is ~0, so all originals survive."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        streaming_bloom_dedup,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(20)
-    rows = docs.collect()
-
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    batches = [
-        [(r["doc_id"], r["text"]) for r in rows[:10]],
-        [(r["doc_id"], r["text"]) for r in rows[10:20]]
-        + [(r["doc_id"] + 1_000_000, r["text"]) for r in rows[:5]]
-        + [(rows[10]["doc_id"] + 2_000_000, rows[10]["text"])],
-    ]
-    for i, batch in enumerate(batches):
-        path = os.path.join(src_dir, f"docs-{i}.json")
-        with open(path, "w") as f:
-            for doc_id, text in batch:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-        os.utime(path, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    q = streaming_bloom_dedup(
-        spark,
-        src_dir,
-        str(tmp_path / "ckpt"),
-        "doc_id long, text string",
-        str(tmp_path / "index"),
-        str(tmp_path / "out"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    survived = set()
-    for path in glob.glob(os.path.join(str(tmp_path / "out"), "epoch=*", "part-*.json")):
-        with open(path) as f:
-            for line in f:
-                survived.add(json.loads(line)["doc_id"])
-    assert survived == {r["doc_id"] for r in rows}
-    # the persisted filter stays capped: set-bit rows <= n*k
-    bits = spark.read.parquet(str(tmp_path / "index")).distinct()
-    assert bits.count() <= 20 * 5
-
-
 def test_streaming_minhash_dedup_drops_cross_batch_rewrites(spark, tmp_path):
     """Near-dup REWRITES (not byte copies) arriving in later batches are
     dropped against the persisted signature index; genuinely new docs and
@@ -698,12 +650,11 @@ def test_health_monitors_skip_wrong_shape_rows(tmp_path):
     """Valid JSON of the WRONG SHAPE — a scalar, a list, a dict missing a
     counter, a counter of the wrong type — must be skipped exactly like
     unparseable bytes; previously these raised KeyError/TypeError past the
-    json.load try (ADVICE r10).  Covers both monitors via the shared
-    shape-checked reader."""
+    json.load try (ADVICE r10), in the dedup monitor's shape-checked
+    reader."""
     import json as _json
 
     from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        ann_ingest_health,
         dedup_ingest_health,
     )
 
@@ -724,23 +675,6 @@ def test_health_monitors_skip_wrong_shape_rows(tmp_path):
     rows = dedup_ingest_health(str(tmp_path / "dedup"))
     assert [r["epoch"] for r in rows] == [0]
     assert rows[0]["dup_rate"] == 0.1
-
-    ann = tmp_path / "ann" / "health"
-    ann.mkdir(parents=True)
-    (ann / "epoch=0.json").write_text(
-        _json.dumps({"epoch": 0, "n_vectors": 5, "mean_qerr": 0.5, "baseline": True})
-    )
-    (ann / "epoch=1.json").write_text(_json.dumps({"epoch": 1, "mean_qerr": "x"}))
-    (ann / "epoch=2.json").write_text("null")
-    (ann / "epoch=3.json").write_text(
-        _json.dumps({"epoch": 3, "mean_qerr": 2.0, "baseline": 1})  # int not bool
-    )
-    (ann / "epoch=4.json").write_text(
-        _json.dumps({"epoch": 4, "mean_qerr": 2.0, "baseline": False})
-    )
-    arows = ann_ingest_health(str(tmp_path / "ann"))
-    assert [r["epoch"] for r in arows] == [0, 4]
-    assert arows[1]["drifted"] is True
 
 
 def test_minhash_dedup_health_survives_mid_epoch_kill(spark, tmp_path):

@@ -1,7 +1,7 @@
 """Replay safety for the persisted-index streaming dedup flows.
 
 The crash window under test (ADVICE r2, medium): a micro-batch writes its
-epoch's hashes/bits to the index, then dies BEFORE the checkpoint commit.
+epoch's hashes to the index, then dies BEFORE the checkpoint commit.
 On restart Spark replays the batch with the same epoch id.  With an
 append-only index the replayed batch probes its own hashes as present,
 computes zero survivors, and overwrites epoch=N's output with an empty set —
@@ -26,7 +26,6 @@ import os
 
 from logspout_kinesis_tests_spark.sources.tables import load_table
 from logspout_kinesis_tests_spark.streaming.batch_apply import (
-    streaming_bloom_dedup,
     streaming_incremental_dedup,
 )
 
@@ -115,10 +114,6 @@ def _run_and_replay(spark, sf_dir, tmp_path, flow, exact: bool = True, **kwargs)
 
 def test_incremental_dedup_replay_regenerates_epoch(spark, sf_dir, tmp_path):
     _run_and_replay(spark, sf_dir, tmp_path, streaming_incremental_dedup)
-
-
-def test_bloom_dedup_replay_regenerates_epoch(spark, sf_dir, tmp_path):
-    _run_and_replay(spark, sf_dir, tmp_path, streaming_bloom_dedup)
 
 
 def test_minhash_dedup_replay_regenerates_epoch(spark, sf_dir, tmp_path):
