@@ -159,7 +159,7 @@ def minhash_signatures(
     ``num_hashes`` arrays per row).  E[matching positions / num_hashes] =
     exact Jaccard, so two signatures estimate pair similarity without the
     texts — which is what makes the signature table a persistable near-dup
-    INDEX (see ``streaming_minhash_dedup``).
+    index.
     """
     exploded = exploded_shingles(
         spread_for_compute(df.select(F.col(id_col), F.col(text_col))),
@@ -173,14 +173,6 @@ def minhash_signatures(
             *[F.min(F.xxhash64("h", F.lit(i))) for i in range(num_hashes)]
         ).alias("minhash")
     )
-
-
-def signature_jaccard_estimate(sig_a, sig_b, num_hashes: int = 64) -> Column:
-    """Estimated Jaccard from two MinHash signature columns: the fraction
-    of positions where the signatures agree."""
-    return F.size(
-        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
-    ).cast("double") / F.lit(float(num_hashes))
 
 
 def minhash_lsh_candidates(

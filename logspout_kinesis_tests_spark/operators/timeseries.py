@@ -342,10 +342,8 @@ def gap_fill_interpolate(
 
 
 # --------------------------------------------------------------------------
-# OHLC candlestick bars (round 8) — shared by the batch query
-# (plans/round8_queries.c16_ohlc_bars) and the streaming twin
-# (streaming/windowed.streaming_ohlc), so batch/stream parity is a property
-# of ONE expression list, not two implementations.
+# OHLC candlestick bars (round 8) — one projection and expression list
+# shared by the bar queries of plans/round8, round9 and round10.
 # --------------------------------------------------------------------------
 
 

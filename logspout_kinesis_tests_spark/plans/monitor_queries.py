@@ -202,9 +202,9 @@ _CUSUM_THRESHOLD_CENTS = int(round(_CUSUM_THRESHOLD * 100))
     "parallel, one shuffle on the series key, no applyInPandas, no "
     "per-group Arrow overhead (the r4 walk formulation cost 8.4 s at "
     "sf0.1 across ~25 k series; this runs in the window-query floor), "
-    "and no recursion-depth ceiling in the oracle.  streaming_cusum "
-    "keeps the stateful step form — the identity needs the full prefix, "
-    "which a watermarked stream doesn't retain.",
+    "and no recursion-depth ceiling in the oracle.  A watermarked stream "
+    "would need the stateful step form instead — the identity needs the "
+    "full prefix, which such a stream doesn't retain.",
 )
 def c16_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

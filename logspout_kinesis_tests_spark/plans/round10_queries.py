@@ -3,7 +3,7 @@ tables, pairwise Cohen's d effect sizes, session-grain ordered funnel and
 time-to-conversion, ATR/Keltner and Donchian channel timeseries, hour-of-
 day seasonal strength, term burstiness, 2-hop neighborhoods and local
 bridges, dedup-aware sampling, per-source freshness audit, session
-overlap counting, the fixed-vocabulary term-monitor batch twin, and
+overlap counting, the fixed-vocabulary term monitor, and
 label-balance auditing over the embeddings table.
 
 Registered LAST (see plans/__init__) so the staleness-ordered rotation
@@ -1113,25 +1113,21 @@ def c20_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# C20+ — fixed-vocabulary term monitor, batch twin of
-# streaming/stateful.streaming_term_monitor (the OHLC/grid-percentile
-# parity pattern: driver verifies batch vs DuckDB, pytest verifies
-# streaming vs batch, transitively pinning all three).
+# C20+ — fixed-vocabulary term monitor (oracle-checked against DuckDB).
 # --------------------------------------------------------------------------
 
 #: Vocabulary size of the monitor grid (a frozen top-K by document
-#: frequency; the streaming twin receives the same list as its contract).
+#: frequency).
 _TERM_MON_K = 20
 
 
 def _term_monitor_batch(
     docs: DataFrame, vocab: DataFrame
 ) -> DataFrame:
-    """(lang, term, cnt, n_tokens, share) for a FROZEN vocab DataFrame —
-    the exact arithmetic of the streaming monitor's emit: int64 counts,
-    one HALF-UP 6dp rounding of cnt/n_tokens.  Zero-count (lang, term)
-    cells are emitted, not dropped (the streaming twin always reports
-    every vocab slot)."""
+    """(lang, term, cnt, n_tokens, share) for a FROZEN vocab DataFrame:
+    int64 counts, one HALF-UP 6dp rounding of cnt/n_tokens.  Zero-count
+    (lang, term) cells are emitted, not dropped (every vocab slot is
+    reported)."""
     toks = docs.select(
         "lang", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     ).filter(F.col("term") != "")
@@ -1192,14 +1188,12 @@ def _top_df_vocab(docs: DataFrame, k: int = _TERM_MON_K) -> DataFrame:
     CROSS JOIN vocab v
     LEFT JOIN cnts c ON c.lang = l.lang AND c.term = v.term
     """,
-    doc="C20+: fixed-vocabulary term monitor (batch twin of "
-    "streaming_term_monitor) — exact per-language occurrence counts and "
+    doc="C20+: fixed-vocabulary term monitor — exact per-language "
+    "occurrence counts and "
     "token shares of the corpus-wide top-20 document-frequency terms, "
     "zero cells included: the vocab-drift dashboard a streaming ingest "
     "watches, recomputed batch-side for audit.  DF rollup → 20-row "
-    "TakeOrdered vocab → broadcast hash lookup over one token pass; the "
-    "streaming twin is pinned equal in pytest (same tokenization, same "
-    "int64 counts, same HALF-UP rounding).",
+    "TakeOrdered vocab → broadcast hash lookup over one token pass.",
 )
 def c20_term_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

@@ -783,13 +783,10 @@ def c17_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# C9+/C20+ — streaming-ingest parity for MinHash dedup (VERDICT r10 #2's
-# first named candidate): the search-before-append cascade of
-# streaming/batch_apply.py streaming_minhash_dedup, replayed as a 3-epoch
-# batch cascade with the engine-portable md5 hash family so the DRIVER
-# hash-verifies the ingest semantics end-to-end (the percentile/OHLC twin
-# pattern — the xxhash64 streaming flow keeps its pytest proofs, this row
-# pins the algorithm).
+# C9+/C20+ — MinHash ingest cascade (VERDICT r10 #2's first named
+# candidate): search-before-append near-dup dedup replayed as a 3-epoch
+# batch cascade with the engine-portable md5 hash family, so the DuckDB
+# oracle hash-verifies the ingest semantics end-to-end.
 # --------------------------------------------------------------------------
 
 #: epoch split, hash family width, band geometry, and the >= 8/16
@@ -896,20 +893,18 @@ def _ing_oracle() -> str:
 @register(
     "c9_minhash_ingest_parity",
     oracle=_ing_oracle(),
-    doc="C9+/C20+: hash-verified parity row for the STREAMING MinHash "
-    "ingest (streaming/batch_apply.py streaming_minhash_dedup) — the "
+    doc="C9+/C20+: hash-verified MinHash ingest cascade — the "
     "corpus is split into 3 deterministic epochs (doc_id mod 3) and "
-    "processed exactly like the micro-batch flow: each epoch's arrivals "
+    "processed like a micro-batch ingest: each epoch's arrivals "
     "are SEARCHED against the accumulated survivor index first "
     "(banded-LSH candidates verified by >= 8/16 equal signature "
     "components, i.e. estimated Jaccard >= 0.5), survivors of that cut "
     "are intra-deduplicated (candidate pairs -> verify -> connected "
     "components -> min-id representative), and the epoch's survivors "
     "append to the index the NEXT epoch searches.  md5 hash family for "
-    "engine portability (the md5-gate pattern); the xxhash64 streaming "
-    "twin keeps its kill-and-restart pytest proofs.  Scale shape: "
-    "identical to the streaming operator — banded inverted-index joins, "
-    "never all-pairs; the index grows by survivors only.",
+    "engine portability (the md5-gate pattern).  Scale shape: "
+    "banded inverted-index joins, never all-pairs; the index grows by "
+    "survivors only.",
 )
 def c9_minhash_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logspout_kinesis_tests_spark.operators.dedup import (

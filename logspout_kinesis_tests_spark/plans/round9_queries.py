@@ -1,5 +1,4 @@
-"""Round-9 queries: sessionization analytics, streaming-twin batch parity
-(grid percentiles), candle shapes and rolling-band/drawdown/RSI timeseries,
+"""Round-9 queries: sessionization analytics, grid percentiles, candle shapes and rolling-band/drawdown/RSI timeseries,
 rank statistics (Spearman, Brown–Forsythe), per-node graph coefficients,
 text readability/code-detection, curation splits and samples, and a kNN
 label vote.
@@ -227,10 +226,9 @@ def c7_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# C20+ — batch parity row for the streaming percentile monitor
-# (streaming/stateful.py::streaming_percentiles): same frozen integer-cent
-# grid, same ceil-rank arithmetic, same inclusive-upper-bound emission —
-# the SQL-expressible twin VERDICT r8 #1 asked for.
+# C20+ — grid percentiles: a frozen integer-cent grid, ceil-rank
+# arithmetic and inclusive-upper-bound emission, so the bars are exact in
+# integer arithmetic and reproducible by a bounded-state monitor.
 # --------------------------------------------------------------------------
 
 _PCT_MN, _PCT_MX, _PCT_B = 0, 49_999, 256
@@ -276,12 +274,11 @@ _PCT_SPAN = _PCT_MX - _PCT_MN + 1
                 // {_PCT_B} - 1 AS BIGINT) AS p99_c
     FROM picks
     """,
-    doc="C20+: batch twin of the streaming percentile monitor "
-    "(streaming/stateful.py::streaming_percentiles) — identical frozen "
-    "256-cell cent grid over [0, 49999], identical exact-integer rank "
+    doc="C20+: grid percentiles — a frozen "
+    "256-cell cent grid over [0, 49999] and exact-integer rank "
     "arithmetic (k = ceil(q·n) via (q_num·n + q_den - 1) div q_den, value "
     "= inclusive upper cent bound of the bucket holding rank k), so a "
-    "batch backfill and the live monitor emit THE SAME bars.  Scale: one "
+    "batch backfill and any monitor on the same grid emit THE SAME bars.  Scale: one "
     "shuffle to (event_type, bucket) counts (≤types·256 rows), windows "
     "only over that bounded table.",
 )

@@ -16,6 +16,8 @@ pytestmark = _pytest_mark_mod.mark.slow
 import io
 from contextlib import redirect_stdout
 
+import pytest
+
 from logspout_kinesis_tests_spark.plans import REGISTRY
 
 
@@ -278,17 +280,16 @@ def test_containment_broadcasts_benchmark(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_no_cartesian_or_row_python_anywhere(spark, sf_dir):
+def test_no_cartesian_or_row_python_anywhere(registry_plans):
     """Repo-wide plan lint: NO registered query may plan a CartesianProduct
     (unbounded pair blowup) or a row-at-a-time Python UDF (BatchEvalPython
     — the 10-100x-slower non-Arrow path).  Broadcast nested-loop joins are
     allowed (bounded by the broadcast side); Arrow paths
     (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are allowed.
-    Plans are built, not executed, so the whole registry lints in seconds.
+    Plans are built, not executed.
     """
     offenders = {}
-    for name, spec in REGISTRY.items():
-        plan = _formatted_plan(spec.build(spark, sf_dir))
+    for name, (plan, _) in registry_plans.items():
         bad = [
             marker
             for marker in ("CartesianProduct", "BatchEvalPython")
@@ -347,14 +348,24 @@ def _count_global_windows(df) -> int:
     return walk(df._jdf.queryExecution().optimizedPlan())
 
 
-def test_no_unbounded_global_windows(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir) -> dict[str, tuple[str, int]]:
+    """{query: (formatted plan, global-window count)} for every registered
+    query, each built once and shared by the two registry-wide lints."""
+    plans = {}
+    for name, spec in REGISTRY.items():
+        df = spec.build(spark, sf_dir)
+        plans[name] = (_formatted_plan(df), _count_global_windows(df))
+    return plans
+
+
+def test_no_unbounded_global_windows(registry_plans):
     """Repo-wide plan lint: an unpartitioned window serializes its entire
     input through one task — fatal at 100 TB unless the input is bounded by
     a constant.  Every registered query must plan zero empty-partition
     Window nodes beyond its explicitly justified allowance above."""
     offenders = {}
-    for name, spec in REGISTRY.items():
-        count = _count_global_windows(spec.build(spark, sf_dir))
+    for name, (_, count) in registry_plans.items():
         if count > ALLOWED_GLOBAL_WINDOWS.get(name, 0):
             offenders[name] = count
     assert not offenders, (

@@ -185,78 +185,3 @@ def test_pareto_skyline_matches_brute_force(spark, sf_dir):
         for a2, b2 in sky[i + 1 :]:
             assert not (a1 >= a2 and b1 >= b2 and (a1 > a2 or b1 > b2))
             assert not (a2 >= a1 and b2 >= b1 and (a2 > a1 or b2 > b1))
-
-
-def test_streaming_ohlc_matches_batch(spark, tmp_path):
-    """The streaming twin folds micro-batches into the SAME bars the batch
-    query computes over the union of rows — including a LATE row (within
-    the watermark) that amends an already-open bar's low/open in batch 2."""
-    import json as _json
-    import os
-
-    rows_b1 = [
-        (1, _ts(0, 5), 1, "m", 2.00, "{}"),
-        (2, _ts(0, 5), 1, "m", 7.00, "{}"),   # same ts as 1: open = id 1
-        (3, _ts(3), 1, "m", 9.00, "{}"),
-        (4, _ts(26), 1, "m", 4.00, "{}"),     # day 2 opens
-    ]
-    rows_b2 = [
-        (5, _ts(27), 1, "m", 6.00, "{}"),
-        (6, _ts(1), 1, "m", 0.50, "{}"),      # LATE: amends day-1 low
-    ]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for i, rows in enumerate((rows_b1, rows_b2)):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
-            for r in rows:
-                f.write(
-                    _json.dumps(
-                        {
-                            "event_id": r[0],
-                            "ts": r[1].strftime("%Y-%m-%d %H:%M:%S"),
-                            "user_id": r[2],
-                            "event_type": r[3],
-                            "value": r[4],
-                            "props": r[5],
-                        }
-                    )
-                    + "\n"
-                )
-    from logspout_kinesis_tests_spark.schemas import EVENTS
-    from logspout_kinesis_tests_spark.streaming.windowed import streaming_ohlc
-
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = (
-        streaming_ohlc(stream, watermark=None)
-        .writeStream.format("memory")
-        .queryName("ohlc_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["event_type"], r["bar_start"].strftime("%Y-%m-%d")): (
-            r["open_c"], r["high_c"], r["low_c"], r["close_c"],
-            r["volume"], r["turnover_c"],
-        )
-        for r in spark.sql("SELECT * FROM ohlc_stream").collect()
-    }
-    # batch query over the union of both files' rows
-    _write_events(spark, str(tmp_path / "batch"), rows_b1 + rows_b2)
-    want = {
-        (r["event_type"], r["day"]): (
-            r["open_c"], r["high_c"], r["low_c"], r["close_c"],
-            r["volume"], r["turnover_c"],
-        )
-        for r in REGISTRY["c16_ohlc_bars"].build(spark, str(tmp_path / "batch")).collect()
-    }
-    assert got == want
-    # the late row really did amend day 1: low = 50 arrived in batch 2
-    day1 = got[("m", _ts(0).strftime("%Y-%m-%d"))]
-    assert day1[0] == 200 and day1[2] == 50

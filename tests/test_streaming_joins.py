@@ -1,5 +1,6 @@
-"""Stream-stream interval join and watermark-bounded dedup (micro-batch
-boundaries forced via sequential availableNow drains)."""
+"""Watermarked event-time windows and watermark-bounded dedup in real
+streaming mode (micro-batch boundaries forced via sequential availableNow
+drains)."""
 
 from __future__ import annotations
 
@@ -7,32 +8,17 @@ import glob
 import json
 import os
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-from logspout_kinesis_tests_spark.streaming.joins import (
-    dedup_within_watermark,
-    stream_interval_join,
-)
+from logspout_kinesis_tests_spark.schemas import EVENTS
+from logspout_kinesis_tests_spark.streaming.joins import dedup_within_watermark
 
-IMPRESSIONS = StructType(
-    [
-        StructField("ad_id", LongType()),
-        StructField("imp_ts", TimestampType()),
-        StructField("campaign", StringType()),
-    ]
-)
-CLICKS = StructType(
-    [
-        StructField("ad_id", LongType()),
-        StructField("click_ts", TimestampType()),
-    ]
-)
 DOCS = StructType(
     [
         StructField("doc_key", StringType()),
@@ -48,56 +34,143 @@ def _write(path: str, rows: list[dict]) -> None:
             f.write(json.dumps(r) + "\n")
 
 
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Clicks join impressions on ad_id only within [imp_ts, imp_ts+30m]."""
-    imp_dir, clk_dir = str(tmp_path / "imp"), str(tmp_path / "clk")
+def test_watermark_drops_late_rows(spark, tmp_path):
+    """C7 streaming form: 1h tumbling window + 30min watermark; an event
+    older than (max_ts - watermark) after window close is discarded."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+
     out_dir = str(tmp_path / "out")
-    for d in (imp_dir, clk_dir, out_dir):
-        os.makedirs(d)
+    os.makedirs(out_dir)
 
+    def run_batch() -> None:
+        # one availableNow drain per call → deterministic batch boundaries
+        # (a single run can coalesce several files into one batch, which
+        # would let the late row in before the watermark advances); the
+        # memory sink can't recover from a checkpoint, so collect emitted
+        # rows via foreachBatch into plain files
+        stream = spark.readStream.schema(EVENTS).json(src)
+        agg = (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count("*").alias("n"))
+            .select(F.col("w.start").cast("string").alias("start"), "n")
+        )
+
+        def collect(df, batch_id):
+            emitted = [(r["start"], r["n"]) for r in df.collect()]
+            if emitted:
+                with open(os.path.join(out_dir, f"emit-{batch_id}.json"), "w") as f:
+                    json.dump(emitted, f)
+
+        q = (
+            agg.writeStream.foreachBatch(collect)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+
+    # batch 1: events at 10:00-10:20; batch 2 advances time to 13:00 (the
+    # watermark passes the 10:00 window's end); batch 3 is a late 10:05 row.
     _write(
-        os.path.join(imp_dir, "i1.json"),
+        os.path.join(src, "f1.json"),
         [
-            {"ad_id": 1, "imp_ts": "2026-08-13T10:00:00", "campaign": "a"},
-            {"ad_id": 2, "imp_ts": "2026-08-13T10:00:00", "campaign": "b"},
-            {"ad_id": 3, "imp_ts": "2026-08-13T10:00:00", "campaign": "c"},
+            {"event_id": 1, "ts": "2026-08-13T10:00:00", "user_id": 1, "event_type": "a", "value": 1.0, "props": "{}"},
+            {"event_id": 2, "ts": "2026-08-13T10:20:00", "user_id": 1, "event_type": "a", "value": 1.0, "props": "{}"},
         ],
     )
+    run_batch()
     _write(
-        os.path.join(clk_dir, "c1.json"),
-        [
-            {"ad_id": 1, "click_ts": "2026-08-13T10:10:00"},  # in window
-            {"ad_id": 2, "click_ts": "2026-08-13T11:30:00"},  # too late
-            {"ad_id": 4, "click_ts": "2026-08-13T10:05:00"},  # no impression
-        ],
+        os.path.join(src, "f2.json"),
+        [{"event_id": 3, "ts": "2026-08-13T13:00:00", "user_id": 1, "event_type": "a", "value": 1.0, "props": "{}"}],
     )
-
-    imp = spark.readStream.schema(IMPRESSIONS).json(imp_dir)
-    clk = spark.readStream.schema(CLICKS).json(clk_dir)
-    joined = stream_interval_join(
-        imp, clk, "ad_id", left_ts="imp_ts", right_ts="click_ts"
-    ).select("ad_id", "campaign")
-
-    def collect(df, batch_id):
-        rows = [(r["ad_id"], r["campaign"]) for r in df.collect()]
-        if rows:
-            with open(os.path.join(out_dir, f"emit-{batch_id}.json"), "w") as f:
-                json.dump(rows, f)
-
-    q = (
-        joined.writeStream.foreachBatch(collect)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_batch()
+    _write(
+        os.path.join(src, "f3.json"),
+        [{"event_id": 4, "ts": "2026-08-13T10:05:00", "user_id": 1, "event_type": "a", "value": 1.0, "props": "{}"}],
     )
-    q.awaitTermination(180)
+    run_batch()
 
-    got = []
+    rows: dict[str, int] = {}
     for path in glob.glob(os.path.join(out_dir, "emit-*.json")):
         with open(path) as f:
-            got.extend(tuple(r) for r in json.load(f))
-    assert sorted(got) == [(1, "a")]
+            rows.update({start: n for start, n in json.load(f)})
+    # the 10:00 window closed with exactly the 2 on-time events; the late
+    # event_id=4 (10:05, after watermark passed 12:30) was dropped
+    assert rows.get("2026-08-13 10:00:00") == 2, rows
+
+
+def test_streaming_session_window_merges_across_batches(spark, tmp_path):
+    """C7 streaming session windows: a session EXTENDED by a later
+    micro-batch merges in state (10:00/10:10 in batch 1, 10:15 in batch 2
+    → one 3-event session), and emits once the watermark passes its end;
+    the still-open 14:00 session is never emitted."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+
+    def run_batch() -> None:
+        stream = spark.readStream.schema(EVENTS).json(src)
+        agg = (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(
+                F.session_window("ts", "30 minutes").alias("w"), F.col("user_id")
+            )
+            .agg(F.count("*").alias("n"))
+            .select(
+                F.col("w.start").cast("string").alias("start"),
+                F.col("w.end").cast("string").alias("end"),
+                "user_id",
+                "n",
+            )
+        )
+
+        def collect(df, batch_id):
+            emitted = [
+                (r["start"], r["end"], r["user_id"], r["n"]) for r in df.collect()
+            ]
+            if emitted:
+                with open(os.path.join(out_dir, f"emit-{batch_id}.json"), "w") as f:
+                    json.dump(emitted, f)
+
+        q = (
+            agg.writeStream.foreachBatch(collect)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+
+    _write(
+        os.path.join(src, "f1.json"),
+        [
+            {"event_id": 1, "ts": "2026-08-13T10:00:00", "user_id": 7, "event_type": "a", "value": 1.0, "props": "{}"},
+            {"event_id": 2, "ts": "2026-08-13T10:10:00", "user_id": 7, "event_type": "a", "value": 1.0, "props": "{}"},
+        ],
+    )
+    run_batch()
+    # extends the open session (gap 5 min < 30), then a far-future event
+    # closes it by advancing the watermark past 10:45
+    _write(
+        os.path.join(src, "f2.json"),
+        [
+            {"event_id": 3, "ts": "2026-08-13T10:15:00", "user_id": 7, "event_type": "a", "value": 1.0, "props": "{}"},
+            {"event_id": 4, "ts": "2026-08-13T14:00:00", "user_id": 7, "event_type": "a", "value": 1.0, "props": "{}"},
+        ],
+    )
+    run_batch()
+    run_batch()  # extra drain: emit anything closed by the final watermark
+
+    emitted = []
+    for path in glob.glob(os.path.join(out_dir, "emit-*.json")):
+        with open(path) as f:
+            emitted.extend(tuple(r) for r in json.load(f))
+    # exactly one closed session: 10:00 → 10:45 (last event + gap), 3 events
+    assert emitted == [("2026-08-13 10:00:00", "2026-08-13 10:45:00", 7, 3)], emitted
 
 
 def test_dedup_within_watermark_bounds_state(spark, tmp_path):
@@ -165,72 +238,3 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     bodies = sorted(b for _, b in got)
     assert "a2" not in bodies, bodies  # in-window duplicate suppressed
     assert bodies == ["a1", "a3", "b1", "c1"], bodies
-
-
-def test_stream_stream_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
-    """leftOuter: an impression with no click must emit NULL-padded — but
-    only after the watermark provably closes its join window.  The closing
-    event arrives in a SECOND availableNow drain so the watermark actually
-    advances past imp_ts + 30m + 10m."""
-    imp_dir, clk_dir, out_dir = (str(tmp_path / d) for d in ("imp", "clk", "out"))
-    for d in (imp_dir, clk_dir, out_dir):
-        os.makedirs(d)
-
-    _write(
-        os.path.join(imp_dir, "i1.json"),
-        [
-            {"ad_id": 1, "imp_ts": "2026-08-13T10:00:00", "campaign": "a"},
-            {"ad_id": 2, "imp_ts": "2026-08-13T10:00:00", "campaign": "b"},
-        ],
-    )
-    _write(
-        os.path.join(clk_dir, "c1.json"),
-        [{"ad_id": 1, "click_ts": "2026-08-13T10:10:00"}],
-    )
-
-    def run():
-        imp = spark.readStream.schema(IMPRESSIONS).json(imp_dir)
-        clk = spark.readStream.schema(CLICKS).json(clk_dir)
-        joined = stream_interval_join(
-            imp, clk, "ad_id", left_ts="imp_ts", right_ts="click_ts",
-            how="leftOuter",
-        ).select("ad_id", "campaign", "click_ts")
-
-        def collect(df, batch_id):
-            rows = [
-                (r["ad_id"], r["campaign"], r["click_ts"] is None)
-                for r in df.collect()
-            ]
-            if rows:
-                path = os.path.join(out_dir, f"emit-{batch_id}.json")
-                with open(path, "w") as f:
-                    json.dump(rows, f)
-
-        q = (
-            joined.writeStream.foreachBatch(collect)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run()
-    # late watermark-advancing traffic on BOTH streams (ad_id 99 matches
-    # nothing; its timestamps push the watermark past 10:40 + delay)
-    _write(
-        os.path.join(imp_dir, "i2.json"),
-        [{"ad_id": 99, "imp_ts": "2026-08-13T13:00:00", "campaign": "z"}],
-    )
-    _write(
-        os.path.join(clk_dir, "c2.json"),
-        [{"ad_id": 99, "click_ts": "2026-08-13T13:00:00"}],
-    )
-    run()
-
-    got = set()
-    for path in glob.glob(os.path.join(out_dir, "emit-*.json")):
-        with open(path) as f:
-            got.update(tuple(r) for r in json.load(f))
-    assert (1, "a", False) in got          # matched row, click attached
-    assert (2, "b", True) in got           # unmatched → NULL-padded emit
