@@ -6,10 +6,12 @@ its doc line.  Run after adding queries:  python scripts/gen_queries_md.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from logspout_kinesis_tests_spark.plans import REGISTRY  # noqa: E402
 
@@ -38,7 +40,7 @@ def main() -> None:
         doc = re.sub(r"\s+", " ", (spec.doc or "").strip())
         doc = doc.replace("|", "\\|")
         lines.append(f"| `{name}` | {check} | {doc} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(REGISTRY)} queries)")
 

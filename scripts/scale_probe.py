@@ -16,12 +16,14 @@ Usage: python scripts/scale_probe.py [replicas]   (default 10 → 50k docs)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from logspout_kinesis_tests_spark.operators.dedup import (  # noqa: E402
     ngram_jaccard_pairs,

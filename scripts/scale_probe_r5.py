@@ -15,13 +15,15 @@ Usage: python scripts/scale_probe_r5.py [replicas]   (default 10)
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from logspout_kinesis_tests_spark.plans import REGISTRY  # noqa: E402
 from logspout_kinesis_tests_spark.session import get_spark  # noqa: E402

@@ -27,13 +27,15 @@ Usage: python scripts/scale_probe_skew.py [n_nodes] [hub_deg] [queries]
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from logspout_kinesis_tests_spark.plans import REGISTRY  # noqa: E402
 from logspout_kinesis_tests_spark.session import get_spark  # noqa: E402
