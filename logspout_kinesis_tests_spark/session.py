@@ -10,14 +10,17 @@ nonetheless made for a real multi-executor cluster at ~100 TB:
 - Arrow enabled for the (rare) Pandas-UDF paths.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are stable regardless of host timezone.
-- Python workers import the installed, compiled pyspark instead of Spark's
-  ``pyspark.zip`` when the two versions match (:func:`redirect_worker_imports`,
-  ``worker_site/sitecustomize.py``).  Spark puts that zip first on every
+- Spark's Python processes import the installed, compiled pyspark instead
+  of Spark's ``pyspark.zip`` when the two versions match
+  (``worker_site/sitecustomize.py``).  Spark puts that zip first on every
   worker's path and it holds no bytecode, so each cold worker, planner and
   streaming source runner compiled pyspark on start: most of a streaming
-  query's set-up.  Only sessions that :func:`get_spark` builds are redirected.
-  On a cluster the entry names a driver-side directory; an executor that
-  lacks it ignores it, and its workers import from the zip as before.
+  query's set-up.  :func:`get_spark` hands that directory to the JVM it
+  launches through the launch environment's ``PYTHONPATH``, which the JVM
+  passes to every Python process it starts.  A JVM that ``get_spark`` did
+  not launch is left alone.  On a cluster the entry names a driver-side
+  directory; an executor that lacks it ignores it, and its workers import
+  from the zip as before.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ import importlib.util
 import os
 import tempfile
 import zipfile
-import zipimport
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -90,57 +92,6 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
-def skip_unchanged_zip_rereads() -> None:
-    """Make ``importlib.invalidate_caches()`` skip zip archives that did not
-    change since they were last read.
-
-    pyspark's Python worker calls ``importlib.invalidate_caches()`` before
-    every task, so that zips added with ``addPyFile`` become importable.
-    Since Python 3.10 that calls ``invalidate_caches`` on every
-    ``zipimporter`` in ``sys.path_importer_cache``, and each re-reads its
-    archive's whole directory.  A worker that imports pyspark from
-    ``pyspark.zip`` holds one importer per package imported from it:
-    130-204 ms a task on a 4-vCPU host.  With :func:`redirect_worker_imports`
-    4 remain, for Spark's two zips (now behind site-packages) and a jar on
-    the worker's path: still 79-98 ms a task.  After this call an importer
-    re-reads only when its archive's (mtime_ns, size, inode) differs from
-    its last read, and importers of one archive share that read.  A
-    rewritten archive is still re-read, and a new ``addPyFile`` zip is a new
-    path, read on first use.
-
-    Idempotent.  Called at the top of the executor-side task entry points,
-    so it holds in every reused worker from its second task on.
-    """
-    original = zipimport.zipimporter.invalidate_caches
-    if getattr(original, "skips_unchanged", False):
-        return
-    read_stamps: dict[str, tuple[int, int, int]] = {}
-
-    def invalidate_caches(self) -> None:
-        try:
-            st = os.stat(self.archive)
-        except OSError:  # archive gone: the original empties the importer
-            read_stamps.pop(self.archive, None)
-            self._read_stamp = None
-            original(self)
-            return
-        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
-        if getattr(self, "_read_stamp", None) == stamp:
-            return
-        cached = zipimport._zip_directory_cache.get(self.archive)
-        if read_stamps.get(self.archive) == stamp and cached is not None:
-            self._files = cached  # another importer of this archive read it
-        else:
-            # stat before read: a write in between leaves an old stamp,
-            # which the next call sees as a change
-            original(self)
-            read_stamps[self.archive] = stamp
-        self._read_stamp = stamp
-
-    invalidate_caches.skips_unchanged = True
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
-
-
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable confs this engine needs to *any* session.
 
@@ -154,25 +105,6 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def redirect_worker_imports(sc: SparkContext) -> None:
-    """Append :data:`WORKER_SITE_DIR` to the ``PYTHONPATH`` of every Python
-    process Spark starts for ``sc``.
-
-    ``sc.environment`` is the driver's copy of ``spark.executorEnv.*``;
-    every Python function, UDF and data source wrapped after this call
-    carries it to its worker, the planner daemons and the streaming source
-    runner included (``spark.python.daemon.module`` would reach only the
-    task daemon).  Entries configured there already are kept, ahead of ours.
-    Nothing is added when this interpreter already has a ``sitecustomize``:
-    Python imports only the first one found, so ours would shadow it.
-    """
-    configured = sc.environment.get("PYTHONPATH", "")
-    entries = [e for e in configured.split(os.pathsep) if e]
-    if WORKER_SITE_DIR in entries or importlib.util.find_spec("sitecustomize"):
-        return
-    sc.environment["PYTHONPATH"] = os.pathsep.join([*entries, WORKER_SITE_DIR])
-
-
 def get_spark(
     app_name: str = "logspout-kinesis-tests-spark",
     master: str | None = None,
@@ -184,11 +116,14 @@ def get_spark(
     the harness contract — but any existing session is reused as-is with
     runtime confs applied.
 
-    A session this call builds also has its Python workers import the
-    installed pyspark rather than Spark's uncompiled ``pyspark.zip``
-    (:func:`redirect_worker_imports`): that cut a consume query's set-up
-    from about 6.5 s to about 3 s on a 4-vCPU host.  A reused session's
-    workers are left as they are.
+    When this call launches the JVM, it appends :data:`WORKER_SITE_DIR` to
+    ``PYTHONPATH`` for the launch only, so that every Python process the
+    JVM starts imports the installed pyspark rather than Spark's uncompiled
+    ``pyspark.zip``: that cut a consume query's set-up from about 6.5 s to
+    about 3 s on a 4-vCPU host.  This process's own environment is restored.
+    Nothing is added when this interpreter already has a ``sitecustomize``:
+    Python imports only the first one found, so ours would shadow it.  A JVM
+    this call did not launch is left as it is.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -206,10 +141,21 @@ def get_spark(
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    builds = SparkContext._active_spark_context is None
-    spark = builder.getOrCreate()
-    if builds:
-        redirect_worker_imports(spark.sparkContext)
+    pythonpath = os.environ.get("PYTHONPATH")
+    hand_over = (
+        SparkContext._gateway is None
+        and importlib.util.find_spec("sitecustomize") is None
+    )
+    if hand_over:
+        entries = [e for e in (pythonpath or "").split(os.pathsep) if e]
+        os.environ["PYTHONPATH"] = os.pathsep.join([*entries, WORKER_SITE_DIR])
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if hand_over and pythonpath is None:
+            del os.environ["PYTHONPATH"]
+        elif hand_over:
+            os.environ["PYTHONPATH"] = pythonpath
     spark.sparkContext.setLogLevel("WARN")
     _silence_bounded_window_warns(spark)
     return ensure_runtime_confs(spark)

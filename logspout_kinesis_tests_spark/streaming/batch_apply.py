@@ -8,7 +8,8 @@ committed before it and overwrites its own, so a replayed epoch is
 idempotent.  ``streaming_incremental_dedup`` is the exact cross-batch dedup
 on that index, ``compact_epoch_index`` folds committed epochs into one
 partition, and ``compact_ann_index`` folds an ANN index kept in the same
-layout.  The bounded-state alternative is ``joins.dedup_within_watermark``.
+layout.  The bounded-state alternative is Spark's own
+``withWatermark(...).dropDuplicatesWithinWatermark(keys)``.
 """
 
 from __future__ import annotations

@@ -179,9 +179,12 @@ class FileShardClient:
         return out
 
     def list_shards(self, stream: str) -> list[str]:
+        # names starting with "_" or "." are not shards (checkpoints, temp
+        # directories), as in Spark's own file listing
         return sorted(
             d for d in os.listdir(self.root)
-            if os.path.isdir(os.path.join(self.root, d))
+            if not d.startswith(("_", "."))
+            and os.path.isdir(os.path.join(self.root, d))
         )
 
     def latest_sequences(self, stream: str) -> dict[str, int]:
@@ -315,10 +318,17 @@ class _PullStreamReader(DataSourceStreamReader):
     """Offsets are ``{shard_id: next_sequence_number}`` — the checkpointed
     analogue of the reference's in-memory iterator list (readstream.py:21).
 
-    Admission control: each trigger admits at most ``maxRecordsPerFetch``
-    new records per shard (steady-state pacing, A4/A5).  After a restart the
-    first batch drains the full backlog uncapped — recovery wants throughput,
-    not pacing.
+    Admission control: ``latestOffset()`` caps each shard at
+    ``maxRecordsPerFetch`` new records beyond ``_current``, the last offset
+    this reader handed out or planned (A4/A5).  A fresh run's first
+    ``latestOffset()`` comes before ``initialOffset()``, while ``_current``
+    is still None, so its first batch admits the whole backlog.  After a
+    restart Spark first calls ``partitions(end, end)`` for the last
+    committed batch, which sets ``_current``, so the first batch is capped.
+    Under ``availableNow`` Spark plans one batch to one ``latestOffset()``
+    snapshot: a fresh run drains everything available, and a restarted run
+    reads one capped batch and stops with the rest unread.  ROADMAP item 1
+    has the planned fix.
     """
 
     def __init__(self, options):
@@ -347,7 +357,7 @@ class _PullStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:  # noqa: N802
         latest = self._client.latest_sequences(self.stream)
         if self._current is None:
-            # restarted from a checkpoint: drain the backlog uncapped
+            # nothing handed out or planned yet (a fresh run's first call)
             end = {s: int(n) for s, n in latest.items()}
         else:
             # a shard missing from _current is newly discovered: it starts at 0
@@ -381,13 +391,6 @@ class _PullStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: ShardPartition) -> Iterator[tuple]:
-        # imported here, not at module level: this module is pickled by
-        # value, and a module-level name would travel with the class by
-        # reference, so every worker unpickling the source (the planner
-        # too, which never calls read) would have to import the package
-        from logspout_kinesis_tests_spark.session import skip_unchanged_zip_rereads
-
-        skip_unchanged_zip_rereads()
         # executor-side: re-create the client, then the reference's poll loop
         # (readstream.py:30-35) bounded to [start, end)
         client = make_client(partition.client_b64)

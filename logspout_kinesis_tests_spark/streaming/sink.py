@@ -37,7 +37,6 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 
 from logspout_kinesis_tests_spark.config import EngineConfig
-from logspout_kinesis_tests_spark.session import skip_unchanged_zip_rereads
 
 
 class FileRecordingClient:
@@ -157,7 +156,6 @@ def _send_partition(
 ) -> None:
     """Executor-side: group a partition's records into ≤cap PutRecords calls
     with bounded per-record retry (A15+A17)."""
-    skip_unchanged_zip_rereads()
     client = client_factory()
 
     def flush(buf: list[tuple[str, str]]) -> None:

@@ -182,6 +182,19 @@ def test_file_shard_client_contract(tmp_path):
     assert [r["Data"] for r in c.get_records(it_seek, 10)["Records"]] == ["b", "c"]
 
 
+def test_file_shard_client_skips_underscore_and_dot_dirs(tmp_path):
+    """Directories whose names start with ``_`` or ``.`` (a checkpoint's
+    ``_seen/``, a writer's ``.tmp/``) are not shards; an empty shard
+    directory is."""
+    root = tmp_path / "shards"
+    for name in ("shard-000", "_seen", ".tmp"):
+        _write_shard_file(str(root), name, "0000.jsonl", [("a", "k")])
+    (root / "shard-001").mkdir()
+    c = FileShardClient(str(root))
+    assert c.list_shards("s") == ["shard-000", "shard-001"]
+    assert c.latest_sequences("s") == {"shard-000": 1, "shard-001": 0}
+
+
 def test_file_shard_client_parses_each_record_once(tmp_path, monkeypatch):
     """A page-by-page drain parses every record line exactly once (earlier
     lines are skipped unparsed, file sizes come from cached counts), and a

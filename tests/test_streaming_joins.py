@@ -17,7 +17,6 @@ from pyspark.sql.types import (
 )
 
 from logspout_kinesis_tests_spark.schemas import EVENTS
-from logspout_kinesis_tests_spark.streaming.joins import dedup_within_watermark
 
 DOCS = StructType(
     [
@@ -184,9 +183,11 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
 
     def run_drain() -> None:
         stream = spark.readStream.schema(DOCS).json(src)
-        deduped = dedup_within_watermark(
-            stream, ["doc_key"], ts_col="ts", max_delay="30 minutes"
-        ).select("doc_key", "body")
+        deduped = (
+            stream.withWatermark("ts", "30 minutes")
+            .dropDuplicatesWithinWatermark(["doc_key"])
+            .select("doc_key", "body")
+        )
 
         def collect(df, batch_id):
             rows = [(r["doc_key"], r["body"]) for r in df.collect()]

@@ -1,7 +1,7 @@
-"""Python workers import the installed, compiled pyspark instead of Spark's
-uncompiled ``pyspark.zip`` (``worker_site/sitecustomize.py``), and only when
-the versions match; ``get_spark`` puts that module on the workers' path only
-when it shadows no other ``sitecustomize``."""
+"""Spark's Python processes import the installed, compiled pyspark instead
+of Spark's uncompiled ``pyspark.zip`` (``worker_site/sitecustomize.py``), and
+only when the versions match; ``get_spark`` hands that module to the JVM it
+launches only when it shadows no other ``sitecustomize``."""
 
 from __future__ import annotations
 
@@ -15,13 +15,11 @@ import zipfile
 
 import pyspark
 import pytest
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
 
 from logspout_kinesis_tests_spark import session
-from logspout_kinesis_tests_spark.session import (
-    WORKER_SITE_DIR,
-    get_spark,
-    redirect_worker_imports,
-)
+from logspout_kinesis_tests_spark.session import WORKER_SITE_DIR, get_spark
 from logspout_kinesis_tests_spark.streaming.pull_source import (
     FileShardClient,
     pull_stream,
@@ -39,10 +37,10 @@ def _load_policy():
     return module
 
 
-def _pyspark_files(version: str) -> dict[str, str]:
+def _package_files(package: str, version: str) -> dict[str, str]:
     return {
-        "pyspark/__init__.py": "",
-        "pyspark/version.py": f"__version__: str = '{version}'\n",
+        f"{package}/__init__.py": "",
+        f"{package}/version.py": f"__version__: str = '{version}'\n",
     }
 
 
@@ -63,57 +61,85 @@ def _tree(root, files: dict[str, str]) -> str:
 
 @pytest.fixture()
 def layout(tmp_path):
-    """Spark's two zips (pyspark 4.1.2), a stdlib-like entry without
-    pyspark, and site-packages entries holding pyspark 4.1.2 and 3.5.0."""
+    """Spark's two zips (pyspark 4.1.2, py4j 0.10.9.9) and its jar, a
+    stdlib-like entry without pyspark, site-packages entries holding
+    pyspark 4.1.2 and 3.5.0, and one holding py4j 0.10.9.9."""
     lib = tmp_path / "spark" / "python" / "lib"
     lib.mkdir(parents=True)
+    jars = tmp_path / "spark" / "jars"
+    jars.mkdir(parents=True)
     return types.SimpleNamespace(
-        pyspark_zip=_zip(lib / "pyspark.zip", _pyspark_files("4.1.2")),
-        py4j_zip=_zip(lib / "py4j-0.10.9.9-src.zip", {"py4j/__init__.py": ""}),
+        pyspark_zip=_zip(lib / "pyspark.zip", _package_files("pyspark", "4.1.2")),
+        py4j_zip=_zip(lib / "py4j-0.10.9.9-src.zip", _package_files("py4j", "0.10.9.9")),
+        jar=_zip(jars / "spark-core_2.13-4.1.2.jar", {"org/apache/spark/A.class": ""}),
         stdlib=_tree(tmp_path / "stdlib", {"json_like.py": ""}),
-        same=_tree(tmp_path / "site-same", _pyspark_files("4.1.2")),
-        other=_tree(tmp_path / "site-other", _pyspark_files("3.5.0")),
+        same=_tree(tmp_path / "site-same", _package_files("pyspark", "4.1.2")),
+        other=_tree(tmp_path / "site-other", _package_files("pyspark", "3.5.0")),
+        py4j=_tree(tmp_path / "site-py4j", _package_files("py4j", "0.10.9.9")),
     )
 
 
-def test_reorders_when_versions_match(layout):
+def test_drops_spark_archives_when_versions_match(layout):
     policy = _load_policy()
-    path = [layout.pyspark_zip, layout.py4j_zip, layout.stdlib, layout.same, "/nowhere"]
-    assert policy.prefer_installed_pyspark(path) == [
-        layout.stdlib, layout.same, layout.pyspark_zip, layout.py4j_zip, "/nowhere",
+    path = [layout.pyspark_zip, layout.py4j_zip, layout.jar, layout.stdlib,
+            layout.same, layout.py4j, "/nowhere"]
+    assert policy.drop_spark_archives(path) == [
+        layout.stdlib, layout.same, layout.py4j, "/nowhere",
     ]
 
 
-def test_unchanged_when_versions_differ(layout):
+def test_keeps_py4j_zip_without_another_py4j(layout):
     policy = _load_policy()
-    path = [layout.pyspark_zip, layout.py4j_zip, layout.stdlib, layout.other, layout.same]
-    assert policy.prefer_installed_pyspark(path) == path
+    path = [layout.pyspark_zip, layout.py4j_zip, layout.jar, layout.stdlib, layout.same]
+    assert policy.drop_spark_archives(path) == [layout.py4j_zip, layout.stdlib, layout.same]
+
+
+def test_keeps_py4j_zip_when_py4j_versions_differ(layout, tmp_path):
+    policy = _load_policy()
+    py4j_old = _tree(tmp_path / "site-py4j-old", _package_files("py4j", "0.10.9.7"))
+    path = [layout.pyspark_zip, layout.py4j_zip, layout.same, py4j_old]
+    assert policy.drop_spark_archives(path) == [layout.py4j_zip, layout.same, py4j_old]
+
+
+def test_unchanged_when_versions_differ(layout):
+    """Only the jar goes: it holds no ``.py`` file."""
+    policy = _load_policy()
+    path = [layout.pyspark_zip, layout.py4j_zip, layout.jar, layout.stdlib,
+            layout.other, layout.same, layout.py4j]
+    assert policy.drop_spark_archives(path) == [
+        layout.pyspark_zip, layout.py4j_zip, layout.stdlib, layout.other,
+        layout.same, layout.py4j,
+    ]
 
 
 def test_unchanged_without_pyspark_outside_the_zip(layout):
+    """Only the jar goes."""
     policy = _load_policy()
-    path = [layout.pyspark_zip, layout.py4j_zip, layout.stdlib, "/nowhere"]
-    assert policy.prefer_installed_pyspark(path) == path
+    path = [layout.pyspark_zip, layout.py4j_zip, layout.jar, layout.stdlib, layout.py4j]
+    assert policy.drop_spark_archives(path) == [
+        layout.pyspark_zip, layout.py4j_zip, layout.stdlib, layout.py4j,
+    ]
 
 
 def test_unchanged_without_a_pyspark_zip(layout):
-    """The py4j zip moves only together with pyspark's."""
+    """The py4j zip goes only together with pyspark's."""
     policy = _load_policy()
-    path = [layout.py4j_zip, layout.stdlib, layout.same]
-    assert policy.prefer_installed_pyspark(path) == path
+    path = [layout.py4j_zip, layout.stdlib, layout.same, layout.py4j]
+    assert policy.drop_spark_archives(path) == path
 
 
 def test_py4j_zip_stays_when_pyspark_zip_stays(layout, tmp_path):
     policy = _load_policy()
     unreadable = _zip(tmp_path / "pyspark.zip", {"pyspark/__init__.py": ""})
-    path = [unreadable, layout.py4j_zip, layout.same]
-    assert policy.prefer_installed_pyspark(path) == path
+    path = [unreadable, layout.py4j_zip, layout.same, layout.py4j]
+    assert policy.drop_spark_archives(path) == path
 
 
-def _startup_modules(pythonpath: list[str]) -> dict:
+def _startup_state(pythonpath: list[str]) -> dict:
     code = (
         "import json, sys\n"
-        "print(json.dumps({'path': sys.path, 'modules': sorted(sys.modules)}))\n"
+        "print(json.dumps({'path': sys.path, 'modules': sorted(sys.modules),\n"
+        "                  'importers': sorted(sys.path_importer_cache)}))\n"
     )
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(pythonpath))
     res = subprocess.run(
@@ -125,46 +151,122 @@ def _startup_modules(pythonpath: list[str]) -> dict:
 
 
 def test_startup_imports_only_the_stdlib(layout):
-    """Run as Python's real start-up hook: the zips move, and the hook adds
-    no pyspark and no module outside the standard library."""
-    zips = [layout.pyspark_zip, layout.py4j_zip]
-    before = _startup_modules([*zips, layout.same])
-    after = _startup_modules([*zips, layout.same, WORKER_SITE_DIR])
-    assert before["path"][1:3] == zips
-    assert after["path"].index(layout.pyspark_zip) == after["path"].index(layout.same) + 1
+    """Run as Python's real start-up hook: Spark's archives leave the path
+    and the importer cache, and the hook adds no pyspark and no module
+    outside the standard library."""
+    archives = [layout.pyspark_zip, layout.py4j_zip, layout.jar]
+    before = _startup_state([*archives, layout.same, layout.py4j])
+    after = _startup_state([*archives, layout.same, layout.py4j, WORKER_SITE_DIR])
+    assert before["path"][1:4] == archives
+    assert not set(archives) & set(after["path"])
+    assert not set(archives) & set(after["importers"])
     added = set(after["modules"]) - set(before["modules"]) - {"sitecustomize"}
     assert not any(m.split(".")[0] == "pyspark" for m in after["modules"])
     assert {m for m in added if m.split(".")[0] not in sys.stdlib_module_names} == set()
 
 
-def _redirected(environment: dict) -> dict:
-    sc = types.SimpleNamespace(environment=dict(environment))
-    redirect_worker_imports(sc)
-    return sc.environment
+def _launch_pythonpath(spark, monkeypatch) -> str | None:
+    """``PYTHONPATH`` as ``get_spark``'s ``getOrCreate()`` call sees it; the
+    call returns ``spark`` and launches nothing."""
+    seen = []
+
+    def get_or_create(self):
+        seen.append(os.environ.get("PYTHONPATH"))
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    before = os.environ.get("PYTHONPATH")
+    # the fixture's arguments, so that no conf of the shared session changes
+    assert get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8) is spark
+    assert os.environ.get("PYTHONPATH") == before
+    return seen[0]
 
 
-def test_redirect_keeps_configured_entries():
-    assert _redirected({}) == {"PYTHONPATH": WORKER_SITE_DIR}
-    configured = os.pathsep.join(["/a", "/b"])
-    assert _redirected({"PYTHONPATH": configured, "X": "1"}) == {
-        "PYTHONPATH": os.pathsep.join(["/a", "/b", WORKER_SITE_DIR]), "X": "1",
-    }
-    assert _redirected({"PYTHONPATH": WORKER_SITE_DIR}) == {"PYTHONPATH": WORKER_SITE_DIR}
+def test_redirect_keeps_configured_entries(spark, monkeypatch):
+    """A JVM that ``get_spark`` launches gets ``worker_site`` behind the
+    configured ``PYTHONPATH`` entries."""
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    assert _launch_pythonpath(spark, monkeypatch) == WORKER_SITE_DIR
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["/a", "/b"]))
+    assert _launch_pythonpath(spark, monkeypatch) == os.pathsep.join(
+        ["/a", "/b", WORKER_SITE_DIR]
+    )
 
 
-def test_no_entry_when_a_sitecustomize_exists(tmp_path, monkeypatch):
+def test_no_entry_when_a_sitecustomize_exists(spark, tmp_path, monkeypatch):
     (tmp_path / "sitecustomize.py").write_text("")
     monkeypatch.syspath_prepend(str(tmp_path))
-    assert _redirected({}) == {}
-    assert _redirected({"PYTHONPATH": "/a"}) == {"PYTHONPATH": "/a"}
+    monkeypatch.setenv("PYTHONPATH", "/a")
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    assert _launch_pythonpath(spark, monkeypatch) == "/a"
 
 
 def test_get_spark_leaves_a_session_it_did_not_build(spark, monkeypatch):
-    environment = dict(spark.sparkContext.environment)
-    monkeypatch.setattr(session, "WORKER_SITE_DIR", "/elsewhere/worker_site")
-    # the fixture's arguments, so that no conf of the shared session changes
-    assert get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8) is spark
-    assert spark.sparkContext.environment == environment
+    """With a JVM already running, ``get_spark`` launches none, so it hands
+    nothing over."""
+    monkeypatch.setenv("PYTHONPATH", "/a")
+    assert _launch_pythonpath(spark, monkeypatch) == "/a"
+
+
+_FRESH_SESSION = r"""
+import json, os, sys, zipfile
+from logspout_kinesis_tests_spark.session import get_spark
+
+before = os.environ.get("PYTHONPATH")
+spark = get_spark("worker-site-launch", master="local[1]", shuffle_partitions=1)
+sc = spark.sparkContext
+
+
+def zip_importers(_):
+    import sys, zipimport
+
+    import py4j, pyspark
+
+    importers = [k for k, v in sys.path_importer_cache.items()
+                 if isinstance(v, zipimport.zipimporter)]
+    return importers, pyspark.__file__, py4j.__file__
+
+
+importers, pyspark_file, py4j_file = sc.parallelize([0], 1).map(zip_importers).collect()[0]
+archive = os.path.join(sys.argv[1], "added_after_a_task.zip")
+with zipfile.ZipFile(archive, "w") as z:
+    z.writestr("added_after_a_task.py", "VALUE = 7\n")
+sc.addPyFile(archive)
+added = sc.parallelize([0], 1).map(lambda _: __import__("added_after_a_task").VALUE).collect()
+print(json.dumps({
+    "jvm_pythonpath": spark._jvm.System.getenv("PYTHONPATH"),
+    "before": before, "after": os.environ.get("PYTHONPATH"),
+    "importers": importers, "pyspark": pyspark_file, "py4j": py4j_file, "added": added,
+}))
+spark.stop()
+"""
+
+
+def test_fresh_session_workers_drop_spark_archives(tmp_path):
+    """A JVM that ``get_spark`` launches carries ``worker_site`` in its
+    environment while the driver's is left as it was; a task holds no
+    importer for an archive of Spark's that it does not import from (pyspark
+    calls ``invalidate_caches`` on each one before every task), and a zip
+    added with ``addPyFile`` after a task still imports in the next one."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION, str(tmp_path)], cwd=str(tmp_path),
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-4000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+
+    assert WORKER_SITE_DIR in out["jvm_pythonpath"].split(os.pathsep)
+    assert out["before"] == out["after"] == repo
+    in_zip = ".zip" + os.sep
+    assert not [k for k in out["importers"] if ".jar" in k]
+    if in_zip not in out["pyspark"]:
+        assert not [k for k in out["importers"] if k.endswith("pyspark.zip")]
+    if in_zip not in out["py4j"]:
+        assert not [k for k in out["importers"] if os.path.basename(k).startswith("py4j-")]
+    assert out["added"] == [7]
 
 
 def test_workers_and_source_runner_import_installed_pyspark(spark, tmp_path):
@@ -213,7 +315,7 @@ def test_workers_and_source_runner_import_installed_pyspark(spark, tmp_path):
         runner_files = set(f.read().split())
 
     from_zip = bool(worker_zips) and (
-        _load_policy().pyspark_version(worker_zips) != pyspark.__version__
+        _load_policy().package_version("pyspark", worker_zips) != pyspark.__version__
     )
     in_zip = ".zip" + os.sep
     assert (in_zip in task_file) == from_zip, task_file
