@@ -5,24 +5,23 @@ options with typed defaults and env fallback (``logspoutkinesis.go:114-180``)
 — as a plain dataclass.  Precedence: explicit option > environment variable >
 default, matching ``route.Options[...]`` then ``getopt(...)``.
 
-Intended-semantics deviations from the reference (documented, deliberate):
+Route keys of the reference that Spark's own mechanics replace are ignored,
+as the Go adapter ignores options it does not know:
 
-- ``buffer_size`` actually works.  The reference parses the wrong variable
-  (``AddBlocksWhenBufferFull_string``, ``logspoutkinesis.go:126``) so the
-  option is dead code there; we implement the intended key.
-- ``stat_interval`` is spelled as intended.  The reference reads the key
-  ``"start_interval"`` (typo, ``logspoutkinesis.go:156``).
-- ``add_blocks_when_buffer_full`` defaults to True here.  Spark's source is
-  pull-based so "drop records when the buffer fills" has no analogue (and in
-  the reference, default-false plus a full buffer silently loses data,
-  ``logspoutkinesis.go:115-121``); blocking admission control is the only
-  Spark mode and the safe one.
+- ``flush_interval`` (logspoutkinesis.go:131-137) → the trigger interval
+  (``produce_pipeline(trigger=...)``);
+- ``buffer_size`` and ``batch_size`` (logspoutkinesis.go:123-145) → the
+  micro-batch, which the sink sends in ≤``max_records_per_put`` groups;
+- ``add_blocks_when_buffer_full`` (logspoutkinesis.go:115-121) → Spark pulls
+  micro-batches, so there is no buffer to overflow and no record to drop;
+- ``stat_interval`` (logspoutkinesis.go:155-161) → the query's progress
+  events (``pipeline.StatsListener``).
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 def getopt(name: str, default: str = "") -> str:
@@ -46,17 +45,6 @@ def _parse_int(raw: str | None, default: int) -> int:
         return default
 
 
-def _parse_duration_seconds(raw: str | None, default: float) -> float:
-    """Parse a duration given in whole seconds (reference passes ints and
-    multiplies by ``time.Second``, logspoutkinesis.go:136)."""
-    if raw is None or raw == "":
-        return default
-    try:
-        return float(raw)
-    except ValueError:
-        return default
-
-
 @dataclass
 class EngineConfig:
     """Bound pipeline configuration (reference adapter struct + producer config).
@@ -66,31 +54,18 @@ class EngineConfig:
     - ``stream_name``      ← route.Address (logspoutkinesis.go:66)
     - ``docker_host``      ← LK_DOCKER_HOST env (logspoutkinesis.go:81)
     - ``use_v0_layout``    ← route option / LK_USE_V0_LAYOUT (logspoutkinesis.go:84-87)
-    - ``buffer_size``      ← "buffer_size", default 10000 (logspoutkinesis.go:123-129)
-    - ``flush_interval_s`` ← "flush_interval", default 1s (logspoutkinesis.go:131-137)
-    - ``batch_size``       ← "batch_size", default 10 (logspoutkinesis.go:139-145)
     - ``max_attempts_per_record`` ← "max_attempts_per_record", default 10
                              (logspoutkinesis.go:147-153)
-    - ``stat_interval_s``  ← intended "stat_interval", default 1s
-                             (logspoutkinesis.go:155-161)
-    - ``add_blocks_when_buffer_full`` ← "add_blocks_when_buffer_full"
-                             (logspoutkinesis.go:115-121; see module docstring)
     """
 
     stream_name: str = "logbuffer-dev"
     docker_host: str = "unknown-docker-host"
     use_v0_layout: bool = False
-    buffer_size: int = 10_000
-    flush_interval_s: float = 1.0
-    batch_size: int = 10
     max_attempts_per_record: int = 10
-    stat_interval_s: float = 1.0
-    add_blocks_when_buffer_full: bool = True
     #: Kinesis PutRecords hard cap — records per API call (AWS service limit,
     #: not a reference constant; the reference's vendored batchproducer
     #: enforces the same limit internally).
     max_records_per_put: int = 500
-    options: dict[str, str] = field(default_factory=dict)
 
     @classmethod
     def from_route(
@@ -113,13 +88,5 @@ class EngineConfig:
             stream_name=address,
             docker_host=getopt("LK_DOCKER_HOST", "unknown-docker-host"),
             use_v0_layout=_parse_bool(opt("use_v0_layout", "LK_USE_V0_LAYOUT"), False),
-            buffer_size=_parse_int(opt("buffer_size"), 10_000),
-            flush_interval_s=_parse_duration_seconds(opt("flush_interval"), 1.0),
-            batch_size=_parse_int(opt("batch_size"), 10),
             max_attempts_per_record=_parse_int(opt("max_attempts_per_record"), 10),
-            stat_interval_s=_parse_duration_seconds(opt("stat_interval"), 1.0),
-            add_blocks_when_buffer_full=_parse_bool(
-                opt("add_blocks_when_buffer_full"), True
-            ),
-            options=opts,
         )

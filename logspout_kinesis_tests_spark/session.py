@@ -25,6 +25,9 @@ nonetheless made for a real multi-executor cluster at ~100 TB:
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import functools
 import importlib.util
 import os
 import tempfile
@@ -66,30 +69,41 @@ def ship_package(spark: SparkSession) -> None:
     they live in an importable module — the worker must import
     ``logspout_kinesis_tests_spark`` itself.  That works only if the driver
     process happened to start in the repo directory.  Zipping the package
-    once per application and ``addPyFile``-ing it removes the cwd
+    and ``addPyFile``-ing it once per application removes the cwd
     dependency on any cluster (workers fetch the zip and prepend it to
-    ``sys.path``).
+    ``sys.path``).  Each driver process makes its own zip, so a later
+    process never ships an earlier one's code.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"logspout_kinesis_tests_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    sc.addPyFile(zpath)
+    sc.addPyFile(_zip_package())
     _SHIPPED.add(app_id)
+
+
+@functools.cache
+def _zip_package() -> str:
+    """Zip this package's sources, once per process, under a name no other
+    process uses; the zip is removed when this process exits."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    fd, zpath = tempfile.mkstemp(prefix="logspout_kinesis_tests_spark_", suffix=".zip")
+    atexit.register(_remove, zpath)
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+    return zpath
+
+
+def _remove(path: str) -> None:
+    # the temp directory may be gone first (a caller cleaning up its own)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:

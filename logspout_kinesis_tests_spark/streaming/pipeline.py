@@ -93,7 +93,7 @@ def consume_pipeline(
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """The reference's consumer program (readstream.py:19-38) end-to-end:
-    shard-parallel pull source → stdout dump.
+    shard-parallel pull source → stdout dump (A25, readstream.py:34-35).
 
     Shards are read by parallel tasks (vs the reference's single round-robin
     thread); sequence numbers live in the checkpoint (vs the in-memory
@@ -107,26 +107,6 @@ def consume_pipeline(
     return (
         src.select("value")  # the reference prints record["Data"] only
         .writeStream.format("console")
-        .option("truncate", "false")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
-def console_pipeline(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    config: EngineConfig,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """A25: the consumer's stdout dump (readstream.py:34-35) as a console
-    sink on the transformed stream."""
-    stream = file_drip_source(spark, source_dir)
-    out = transform(stream, config)
-    return (
-        out.writeStream.format("console")
         .option("truncate", "false")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(**(trigger or {"availableNow": True}))

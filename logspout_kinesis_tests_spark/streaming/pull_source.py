@@ -20,10 +20,11 @@ path or a factory callable; ``pull_stream`` binds the kwargs and ships the
 factory *by value* (cloudpickle) through the source options, so neither the
 driver-side planner worker (which unpickles the DataSource but does not see
 ``addPyFile`` includes) nor the executors need this package importable.
-Symmetric with the sink's ``put_records`` contract
-(:mod:`logspout_kinesis_tests_spark.streaming.sink`).  Tests inject
-:func:`file_shard_client`; production wires boto3 behind the identical
-contract via :func:`boto3_pull_client`.
+Tests inject :func:`file_shard_client`; production wires boto3 behind the
+identical contract via :func:`boto3_pull_client`.  :class:`FileShardClient`
+is the one file-backed stream of both halves: it also speaks the sink's
+``put_records`` contract (:mod:`logspout_kinesis_tests_spark.streaming.sink`),
+so the shard files the producer writes are the ones this source reads.
 
 Client contract (duck-typed; names mirror the Kinesis API used by the
 reference so the boto3 binding is mechanical)::
@@ -43,10 +44,12 @@ from __future__ import annotations
 
 import base64
 import functools
+import hashlib
 import importlib
 import json
 import os
 import sys
+import tempfile
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
@@ -113,14 +116,16 @@ class ExpiredIteratorError(Exception):
 # Test client: shard directories of JSON-lines files.
 # --------------------------------------------------------------------------
 class FileShardClient:
-    """``get_records`` contract over a directory tree — one subdirectory per
-    shard, each holding sorted ``*.jsonl`` files of
-    ``{"data": ..., "partition_key": ...}`` records.
+    """The sink's ``put_records`` and the source's ``get_records`` contracts
+    over one directory tree — one subdirectory per shard, each holding
+    sorted ``*.jsonl`` files of ``{"data": ..., "partition_key": ...}``
+    records — so what a producer puts is what a consumer reads.
 
     A shard's sequence number is the cumulative record index across its
     sorted files, so appending a new file extends the stream without
     renumbering — the file-system analogue of a shard's monotone sequence.
-    Readable from any process (executors run in separate workers).
+    Readable and writable from any process (executors run in separate
+    workers).
 
     Per-file record counts are cached by (size, mtime_ns): a counted file
     that lies wholly before a call's first record is skipped unopened, and
@@ -230,6 +235,61 @@ class FileShardClient:
                 {"stream": state["stream"], "shard": shard, "seq": next_seq}
             ),
         }
+
+    def put_records(self, stream_name: str, records: list[tuple[str, str]]) -> list[int]:
+        """The sink's contract: append ``(data, partition_key)`` records and
+        return the indices of failed ones (never any here).
+
+        A key goes to the shard whose even slice of the 128-bit MD5 range
+        holds it, as Kinesis maps keys to shards:
+        ``sorted(shards)[md5(key) * N >> 128]``.  The shard directories must
+        exist already, as a Kinesis stream has its shards before a put.
+        ``stream_name`` is ignored: the root is the stream.
+        """
+        if not records:
+            return []
+        shards = self.list_shards(stream_name)
+        if not shards:
+            raise ValueError(f"stream {self.root!r} has no shard directories")
+        lines: dict[str, list[str]] = {}
+        for data, key in records:
+            digest = int(hashlib.md5(key.encode("utf-8")).hexdigest(), 16)
+            shard = shards[digest * len(shards) >> 128]
+            lines.setdefault(shard, []).append(
+                json.dumps({"data": data, "partition_key": key}) + "\n"
+            )
+        for shard, shard_lines in lines.items():
+            self._publish(shard, "".join(shard_lines))
+        return []
+
+    def _publish(self, shard_id: str, text: str) -> None:
+        """Add ``text`` to the shard as one new file that sorts after every
+        existing one, so no record already there is renumbered.
+
+        The file is written under a hidden name, then hard-linked to the
+        dense successor name ``p{n:012d}.jsonl``; a concurrent writer that
+        took the name first makes the link fail, and the name is re-chosen.
+        """
+        d = self._shard_dir(shard_id)
+        fd, tmp = tempfile.mkstemp(prefix=".put-", dir=d)
+        try:
+            with os.fdopen(fd, "w") as f:
+                f.write(text)
+            while True:
+                names = [os.path.basename(p) for p in self._files(shard_id)]
+                name = f"p{len(names):012d}.jsonl"
+                if names and name <= names[-1]:
+                    raise RuntimeError(
+                        f"cannot append to shard {shard_id!r}: {names[-1]!r} "
+                        f"sorts after the next name {name!r}"
+                    )
+                try:
+                    os.link(tmp, os.path.join(d, name))
+                    return
+                except FileExistsError:
+                    continue
+        finally:
+            os.unlink(tmp)
 
 
 def file_shard_client(root: str) -> FileShardClient:

@@ -19,19 +19,18 @@ docker_host (logspoutkinesis.go:74-172, :209).  Spark-first mapping:
                              "drop when buffer full" reference default is
                              data loss and intentionally not reproduced (A18)
 
-The Kinesis client is injectable: tests use :class:`FileRecordingClient`
-(records every call to disk — executors run in separate worker processes,
-so shared-memory fakes can't work); production wires boto3 PutRecords with
-the same ``put_records`` contract.
+The Kinesis client is injectable: tests use
+:class:`~logspout_kinesis_tests_spark.streaming.pull_source.FileShardClient`,
+the file-backed stream that the pull source reads back (executors run in
+separate worker processes, so shared-memory fakes can't work), and wrap it
+in :class:`ThrottlingClient` to drive the retry path; production wires
+boto3 PutRecords with the same ``put_records`` contract.
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import os
-import time
-import uuid
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -39,49 +38,39 @@ from pyspark.sql import DataFrame
 from logspout_kinesis_tests_spark.config import EngineConfig
 
 
-class FileRecordingClient:
-    """Test double for the Kinesis client: appends each ``put_records`` call
-    as one JSON file in ``out_dir`` (visible across executor processes).
+class ThrottlingClient:
+    """Wraps a file-backed ``put_records`` client and fails every
+    ``every``-th record of a call (1-based) on its first offer, to drive the
+    A17 bounded-retry path.
 
-    ``fail_every``: deterministically report every Nth record (1-based,
-    counted per call) as failed on its first delivery attempt — drives the
-    A17 bounded-retry path.  Failure state lives on disk keyed by record
-    payload hash so retried records succeed on the second attempt.
+    Offers are marked by payload hash under ``<client.root>/_seen`` (visible
+    across executor processes; the pull source skips ``_`` directories),
+    so a retried record goes through; the rest are passed to ``client``.
     """
 
-    def __init__(self, out_dir: str, fail_every: int = 0):
-        self.out_dir = out_dir
-        self.fail_every = fail_every
+    def __init__(self, client, every: int):
+        self.client = client
+        self.seen_dir = os.path.join(client.root, "_seen")
+        self.every = every
 
     def put_records(self, stream_name: str, records: list[tuple[str, str]]) -> list[int]:
-        os.makedirs(self.out_dir, exist_ok=True)
-        failed: list[int] = []
-        if self.fail_every:
-            seen_dir = os.path.join(self.out_dir, "_seen")
-            os.makedirs(seen_dir, exist_ok=True)
-            for i, (data, _key) in enumerate(records, start=1):
-                if i % self.fail_every == 0:
-                    marker = os.path.join(
-                        seen_dir, hashlib.md5(data.encode()).hexdigest()
-                    )
-                    if not os.path.exists(marker):
-                        with open(marker, "w") as f:
-                            f.write("1")
-                        failed.append(i - 1)
-        failed_set = set(failed)
-        delivered = [r for i, r in enumerate(records) if i not in failed_set]
-        if delivered:
-            path = os.path.join(self.out_dir, f"put-{uuid.uuid4().hex}.json")
-            with open(path, "w") as f:
-                json.dump(
-                    {
-                        "stream": stream_name,
-                        "ts": time.time(),
-                        "records": [{"data": d, "partition_key": k} for d, k in delivered],
-                    },
-                    f,
-                )
-        return failed
+        os.makedirs(self.seen_dir, exist_ok=True)
+        failed, passed = [], []
+        for i, (data, _key) in enumerate(records):
+            if (i + 1) % self.every == 0:
+                marker = os.path.join(self.seen_dir, hashlib.md5(data.encode()).hexdigest())
+                try:
+                    open(marker, "x").close()
+                    failed.append(i)
+                    continue
+                except FileExistsError:
+                    pass
+            passed.append(i)
+        refused = (
+            self.client.put_records(stream_name, [records[i] for i in passed])
+            if passed else []
+        )
+        return sorted(failed + [passed[j] for j in refused])
 
 
 def boto3_client_factory(region: str):
@@ -99,7 +88,7 @@ def boto3_client_factory(region: str):
         except ImportError as exc:
             raise NotImplementedError(
                 "boto3 is not available in this environment; inject a client "
-                "factory (e.g. FileRecordingClient) instead"
+                "factory (e.g. file_shard_client) instead"
             ) from exc
 
         client = boto3.client("kinesis", region_name=region)

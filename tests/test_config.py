@@ -1,5 +1,5 @@
-"""EngineConfig resolution (A20/A21): option > env > default, typed parsing,
-reference bugs fixed."""
+"""EngineConfig resolution (A20/A21): option > env > default, typed parsing;
+route keys that Spark's own mechanics replace are ignored."""
 
 from __future__ import annotations
 
@@ -10,14 +10,8 @@ from logspout_kinesis_tests_spark.config import EngineConfig, getopt
 
 def test_defaults_match_reference():
     cfg = EngineConfig.from_route()
-    # logspoutkinesis.go defaults: buffer 10000 (:123), flush 1s (:131),
-    # batch 10 (:139), attempts 10 (:147), stat 1s (:155)
     assert cfg.stream_name == "logbuffer-dev"
-    assert cfg.buffer_size == 10_000
-    assert cfg.flush_interval_s == 1.0
-    assert cfg.batch_size == 10
-    assert cfg.max_attempts_per_record == 10
-    assert cfg.stat_interval_s == 1.0
+    assert cfg.max_attempts_per_record == 10  # logspoutkinesis.go:147
     assert cfg.docker_host == "unknown-docker-host"  # go:81 default
     assert cfg.use_v0_layout is False
 
@@ -26,20 +20,15 @@ def test_options_override_defaults():
     cfg = EngineConfig.from_route(
         "my-stream",
         {
-            "buffer_size": "500",  # works here; dead code in the reference (go:126)
+            "max_attempts_per_record": "3",
+            "use_v0_layout": "true",
+            # replaced by the trigger interval and the micro-batch: ignored
             "flush_interval": "5",
             "batch_size": "100",
-            "max_attempts_per_record": "3",
-            "stat_interval": "2",  # intended key; reference reads "start_interval" (go:156)
-            "use_v0_layout": "true",
         },
     )
     assert cfg.stream_name == "my-stream"
-    assert cfg.buffer_size == 500
-    assert cfg.flush_interval_s == 5.0
-    assert cfg.batch_size == 100
     assert cfg.max_attempts_per_record == 3
-    assert cfg.stat_interval_s == 2.0
     assert cfg.use_v0_layout is True
 
 
@@ -55,9 +44,11 @@ def test_env_fallback_and_option_precedence(monkeypatch):
 
 
 def test_malformed_values_fall_back_to_defaults():
-    cfg = EngineConfig.from_route(options={"batch_size": "not-a-number", "flush_interval": ""})
-    assert cfg.batch_size == 10
-    assert cfg.flush_interval_s == 1.0
+    cfg = EngineConfig.from_route(
+        options={"max_attempts_per_record": "not-a-number", "use_v0_layout": ""}
+    )
+    assert cfg.max_attempts_per_record == 10
+    assert cfg.use_v0_layout is False
 
 
 def test_getopt(monkeypatch):

@@ -1,56 +1,7 @@
-"""Engine facade (A22): registry-selected sinks, config binding."""
+"""Library surface outside the streaming core: the SQL views over the
+oracle tables, and the Morton key of the dataset writer."""
 
 from __future__ import annotations
-
-import glob
-import json
-import os
-
-import pytest
-
-from logspout_kinesis_tests_spark.config import EngineConfig
-from logspout_kinesis_tests_spark.engine import Engine
-from logspout_kinesis_tests_spark.streaming.sink import FileRecordingClient
-
-
-@pytest.fixture()
-def src_dir(tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    rows = [
-        {"data": "m1", "source": "stdout", "time": "2026-08-13T10:00:00",
-         "container_id": "ab" * 32, "container_name": "/w", "image": "nginx",
-         "hostname": "h", "labels": {}},
-    ]
-    with open(os.path.join(src, "f.json"), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    return src
-
-
-def test_kinesis_sink_via_registry(spark, tmp_path, src_dir):
-    out = str(tmp_path / "puts")
-    eng = Engine(EngineConfig(stream_name="s1", docker_host="dh"))
-    q = eng.start(
-        spark, src_dir, str(tmp_path / "ckpt"), sink="kinesis",
-        client_factory=lambda: FileRecordingClient(out),
-    )
-    q.awaitTermination(120)
-    calls = [json.load(open(p)) for p in glob.glob(out + "/put-*.json")]
-    assert calls and calls[0]["stream"] == "s1"
-    assert calls[0]["records"][0]["partition_key"] == "dh"
-
-
-def test_console_sink_via_registry(spark, tmp_path, src_dir):
-    eng = Engine(EngineConfig())
-    q = eng.start(spark, src_dir, str(tmp_path / "ckpt2"), sink="console")
-    q.awaitTermination(120)
-    assert not q.isActive
-
-
-def test_unknown_sink_raises(spark, tmp_path, src_dir):
-    with pytest.raises(KeyError, match="unknown sink"):
-        Engine(EngineConfig()).start(spark, src_dir, str(tmp_path / "x"), sink="nope")
 
 
 def test_register_views_makes_sql_surface(spark, sf_dir):

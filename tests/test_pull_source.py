@@ -4,10 +4,12 @@ checkpointed sequence-number resume, per-trigger admission cap.  No AWS."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
 import pytest
+from conftest import new_stream, shard_records
 
 from pyspark.sql import functions as F
 
@@ -235,6 +237,73 @@ def test_file_shard_client_parses_each_record_once(tmp_path, monkeypatch):
     assert c.latest_sequences("s") == {"shard-000": 9}
     it = c.get_shard_iterator("s", "shard-000", "AT_SEQUENCE_NUMBER", 4)
     assert [r["Data"] for r in c.get_records(it, limit=2)["Records"]] == ["x", "m-2-0"]
+
+
+def test_put_records_routes_keys_to_their_md5_range_shard(tmp_path):
+    """A key goes to the shard owning its slice of the MD5 range, as
+    Kinesis splits a stream's hash keys evenly among its shards."""
+    root = str(tmp_path / "stream")
+    with pytest.raises(ValueError, match="no shard"):
+        FileShardClient(new_stream(root, shards=0)).put_records("s", [("d", "k")])
+    c = FileShardClient(new_stream(root, shards=3))
+    keys = [f"host-{i}" for i in range(30)]
+    assert c.put_records("s", [(f"m-{k}", k) for k in keys]) == []
+    stored = shard_records(root)
+    for shard, records in stored.items():
+        for r in records:
+            digest = int(hashlib.md5(r["PartitionKey"].encode()).hexdigest(), 16)
+            assert shard == f"shard-{digest * 3 >> 128:03d}"
+            assert r["Data"] == "m-" + r["PartitionKey"]
+    assert sorted(r["PartitionKey"] for rs in stored.values() for r in rs) == sorted(keys)
+    assert all(stored.values())  # 30 keys reach all three shards
+
+
+def test_put_records_keeps_sequence_numbers(tmp_path):
+    """Puts append after a shard's existing files: every record already
+    there keeps its sequence number, and the new ones follow densely."""
+    root = str(tmp_path / "stream")
+    _write_shard_file(root, "shard-000", "0000.jsonl", [("a", "k"), ("b", "k")])
+    c = FileShardClient(root)
+    before = shard_records(root)["shard-000"]
+    for n in range(3):
+        c.put_records("s", [(f"put-{n}-{i}", "k") for i in range(2)])
+    after = shard_records(root)["shard-000"]
+    assert after[:2] == before
+    assert [(r["SequenceNumber"], r["Data"]) for r in after[2:]] == [
+        (2 + 2 * n + i, f"put-{n}-{i}") for n in range(3) for i in range(2)
+    ]
+    # one published file per call; no temp file is left behind
+    assert sorted(os.listdir(os.path.join(root, "shard-000"))) == [
+        "0000.jsonl", *(f"p{n:012d}.jsonl" for n in range(1, 4))
+    ]
+
+
+def test_put_records_refuses_a_name_that_sorts_before_the_last(tmp_path):
+    """A file that sorts after the next put's name would put the new
+    records before it and renumber its records, so the put is refused."""
+    root = str(tmp_path / "stream")
+    _write_shard_file(root, "shard-000", "z.jsonl", [("a", "k")])
+    with pytest.raises(RuntimeError, match="sorts after"):
+        FileShardClient(root).put_records("s", [("b", "k")])
+    assert [r["Data"] for r in shard_records(root)["shard-000"]] == ["a"]
+    assert os.listdir(os.path.join(root, "shard-000")) == ["z.jsonl"]
+
+
+def test_throttling_client_fails_each_marked_record_once(tmp_path):
+    """Every ``every``-th record of a call fails on its first offer only;
+    the rest, and a retried record, reach the wrapped client."""
+    from logspout_kinesis_tests_spark.streaming.sink import ThrottlingClient
+
+    root = new_stream(str(tmp_path / "stream"))
+    c = ThrottlingClient(FileShardClient(root), every=3)
+    records = [(f"m-{i}", "k") for i in range(7)]
+    assert c.put_records("s", records) == [2, 5]
+    assert c.put_records("s", records) == []  # offered again: none fail
+    assert c.put_records("s", [records[2], records[5]]) == []
+    data = [r["Data"] for r in shard_records(root)["shard-000"]]
+    assert data == [d for d, _ in records if d not in ("m-2", "m-5")] + [
+        d for d, _ in records
+    ] + ["m-2", "m-5"]
 
 
 def test_consume_pipeline_runs(spark, tmp_path, shard_root):

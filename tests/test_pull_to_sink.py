@@ -1,8 +1,17 @@
-"""End-to-end composition test (VERDICT r2 #8): the reference's actual
-deployment is the pull consumer feeding downstream processing
-(readstream.py consuming what logspoutkinesis.go produced).  The two halves
-are tested separately in test_pull_source.py / test_streaming.py; here they
-run as ONE checkpointed streaming query:
+"""End-to-end composition tests: the reference's deployment is one loop,
+logspoutkinesis.go producing into a stream that readstream.py consumes.
+Here that stream is one ``FileShardClient`` directory: the sink's
+``put_records`` writes the shard files the pull source reads.
+
+``test_produce_consume_round_trip`` runs the loop itself:
+
+    produce_pipeline (A7-A17) → shard files → pull_stream (A2-A5)
+      → parse_consumed (A14) → quarantine_split (A19)
+
+under throttling and under a replayed producer epoch.
+
+``test_pull_to_sink_relay`` runs the pull consumer feeding the producer's
+transform and sink as ONE checkpointed streaming query:
 
     pull_stream (fake sharded stream, A2-A5)
       → parse_consumed (A14)
@@ -23,15 +32,15 @@ import glob
 import json
 import os
 
+import pytest
+from conftest import new_stream, shard_records
+
 from logspout_kinesis_tests_spark.config import EngineConfig
-from logspout_kinesis_tests_spark.operators.etl import parse_consumed
-from logspout_kinesis_tests_spark.schemas import LOG_INPUT
-from logspout_kinesis_tests_spark.streaming.pipeline import transform
-from logspout_kinesis_tests_spark.streaming.pull_source import pull_stream
-from logspout_kinesis_tests_spark.streaming.sink import (
-    FileRecordingClient,
-    make_batch_writer,
-)
+from logspout_kinesis_tests_spark.operators.etl import parse_consumed, quarantine_split
+from logspout_kinesis_tests_spark.schemas import LOG_INPUT, LOGSTASH_V1
+from logspout_kinesis_tests_spark.streaming.pipeline import produce_pipeline, transform
+from logspout_kinesis_tests_spark.streaming.pull_source import FileShardClient, pull_stream
+from logspout_kinesis_tests_spark.streaming.sink import ThrottlingClient, make_batch_writer
 
 CLIENT = "logspout_kinesis_tests_spark.streaming.pull_source:file_shard_client"
 
@@ -59,7 +68,7 @@ def _write_shard(root: str, shard: int, name: str, payloads: list[str]) -> None:
             f.write(json.dumps({"data": p, "partition_key": f"shard-{shard}"}) + "\n")
 
 
-def _relay(spark, root, ckpt, out_dir, cfg):
+def _relay(spark, root, ckpt, out_root, cfg):
     src = pull_stream(
         spark, CLIENT, {"root": root}, stream="logbuffer-dev", max_records_per_fetch=4
     )
@@ -67,7 +76,7 @@ def _relay(spark, root, ckpt, out_dir, cfg):
     q = (
         transform(logs, cfg)
         .writeStream.foreachBatch(
-            make_batch_writer(lambda: FileRecordingClient(out_dir), cfg)
+            make_batch_writer(lambda: FileShardClient(out_root), cfg)
         )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -76,47 +85,19 @@ def _relay(spark, root, ckpt, out_dir, cfg):
     q.awaitTermination(120)
 
 
-def _delivered(out_dir: str) -> list[str]:
-    msgs = []
-    for path in sorted(glob.glob(os.path.join(out_dir, "put-*.json"))):
-        with open(path) as f:
-            for r in json.load(f)["records"]:
-                msgs.append(json.loads(r["data"])["message"])
-    return msgs
+def _delivered(out_root: str) -> list[str]:
+    return [
+        json.loads(r["Data"])["message"] for r in shard_records(out_root)["shard-000"]
+    ]
 
 
-def test_pull_to_sink_relay(spark, tmp_path):
-    root = str(tmp_path / "shards")
-    for shard in range(2):
-        _write_shard(
-            root, shard, "0000.jsonl", [_log_payload(i, shard) for i in range(6)]
-        )
-        _write_shard(
-            root, shard, "0001.jsonl", [_log_payload(i, shard) for i in range(6, 12)]
-        )
-    ckpt, out_dir = str(tmp_path / "ckpt"), str(tmp_path / "puts")
-    cfg = EngineConfig(stream_name="logbuffer-dev", docker_host="dh-relay")
+#: md5 routes these keys to different shards of a two-shard stream
+HOSTS = {"dh-a": "shard-001", "dh-b": "shard-000"}
 
-    # phase 1: clean drain — 24 records, each exactly once, v1-serialized
-    _relay(spark, root, ckpt, out_dir, cfg)
-    first = _delivered(out_dir)
-    expected = {f"log-line-{s}-{i}" for s in range(2) for i in range(12)}
-    assert sorted(first) == sorted(expected)
-    calls = glob.glob(os.path.join(out_dir, "put-*.json"))
-    with open(calls[0]) as f:
-        sample = json.load(f)["records"][0]
-    assert sample["partition_key"] == "dh-relay"  # A16 keying survives relay
-    assert "@timestamp" in json.loads(sample["data"])  # A13 layout
 
-    # phase 2: append mid-stream, resume from the checkpoint
-    _write_shard(
-        root, 1, "0002.jsonl", [_log_payload(i, 1) for i in range(12, 15)]
-    )
-    _relay(spark, root, ckpt, out_dir, cfg)
-    second = _delivered(out_dir)
-    assert sorted(second) == sorted(first + [f"log-line-1-{i}" for i in (12, 13, 14)])
-
-    # phase 3: crash between sink write and commit — replay exactly one epoch
+def _drop_last_commit(ckpt: str) -> None:
+    """Forget the last committed epoch, as a crash between the sink's write
+    and the commit does: the next run replays that epoch."""
     commits = sorted(
         p
         for p in glob.glob(os.path.join(ckpt, "commits", "*"))
@@ -128,8 +109,113 @@ def test_pull_to_sink_relay(spark, tmp_path):
     )
     if os.path.exists(crc):
         os.remove(crc)
-    _relay(spark, root, ckpt, out_dir, cfg)
-    third = _delivered(out_dir)
+
+
+def _consume(spark, root: str, ckpt: str) -> tuple[list[dict], int]:
+    """Drain the stream through pull_stream → parse_consumed →
+    quarantine_split: the good rows and the number quarantined."""
+    good_rows: list[dict] = []
+    quarantined = [0]
+
+    def collect(df, _batch_id):
+        good, bad = quarantine_split(df)
+        good_rows.extend(
+            r.asDict()
+            for r in good.select(
+                "shard_id", "sequence_number", "partition_key", "parsed.message"
+            ).collect()
+        )
+        quarantined[0] += bad.count()
+
+    q = (
+        parse_consumed(pull_stream(spark, CLIENT, {"root": root}), LOGSTASH_V1)
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return good_rows, quarantined[0]
+
+
+@pytest.mark.parametrize("fault", ["throttled", "replayed"])
+def test_produce_consume_round_trip(spark, tmp_path, fault):
+    """What the producer puts is what the consumer reads: under throttling,
+    every record exactly once; after a replayed producer epoch, that
+    epoch's records twice and nothing lost."""
+    root = new_stream(str(tmp_path / "stream"), shards=2)
+    produced: list[str] = []
+    replayed: list[str] = []
+    for h, host in enumerate(HOSTS):
+        cfg = EngineConfig(stream_name="logbuffer-dev", docker_host=host)
+        factory = (
+            (lambda: ThrottlingClient(FileShardClient(root), every=2))
+            if fault == "throttled"
+            else (lambda: FileShardClient(root))
+        )
+        src, ckpt = str(tmp_path / f"src-{h}"), str(tmp_path / f"produce-{h}")
+        os.makedirs(src)
+        # one file per run, so the last run's epoch holds exactly the last
+        # file: files written together may be read in any order
+        for k in range(3):
+            with open(os.path.join(src, f"{k}.json"), "w") as f:
+                for i in range(4 * k, 4 * k + 4):
+                    f.write(_log_payload(i, h) + "\n")
+            produce_pipeline(spark, src, ckpt, cfg, factory).awaitTermination(120)
+        produced += [f"log-line-{h}-{i}" for i in range(12)]
+        if fault == "replayed" and h == 0:
+            _drop_last_commit(ckpt)
+            produce_pipeline(spark, src, ckpt, cfg, factory).awaitTermination(120)
+            replayed = [f"log-line-0-{i}" for i in range(8, 12)]
+
+    stored = shard_records(root)
+    assert {s: {r["PartitionKey"] for r in rs} for s, rs in stored.items()} == {
+        shard: {host} for host, shard in HOSTS.items()
+    }
+    good, quarantined = _consume(spark, root, str(tmp_path / "consume"))
+    assert quarantined == 0
+    for shard, records in stored.items():
+        assert sorted(r["sequence_number"] for r in good if r["shard_id"] == shard) == (
+            list(range(len(records)))
+        )
+    # at least once: a replayed epoch comes back as duplicates of exactly
+    # its own records, never as a loss
+    assert sorted(r["message"] for r in good) == sorted(produced + replayed)
+
+
+def test_pull_to_sink_relay(spark, tmp_path):
+    root = str(tmp_path / "shards")
+    for shard in range(2):
+        _write_shard(
+            root, shard, "0000.jsonl", [_log_payload(i, shard) for i in range(6)]
+        )
+        _write_shard(
+            root, shard, "0001.jsonl", [_log_payload(i, shard) for i in range(6, 12)]
+        )
+    ckpt, out_root = str(tmp_path / "ckpt"), new_stream(str(tmp_path / "out"))
+    cfg = EngineConfig(stream_name="logbuffer-dev", docker_host="dh-relay")
+
+    # phase 1: clean drain — 24 records, each exactly once, v1-serialized
+    _relay(spark, root, ckpt, out_root, cfg)
+    first = _delivered(out_root)
+    expected = {f"log-line-{s}-{i}" for s in range(2) for i in range(12)}
+    assert sorted(first) == sorted(expected)
+    sample = shard_records(out_root)["shard-000"][0]
+    assert sample["PartitionKey"] == "dh-relay"  # A16 keying survives relay
+    assert "@timestamp" in json.loads(sample["Data"])  # A13 layout
+
+    # phase 2: append mid-stream, resume from the checkpoint
+    _write_shard(
+        root, 1, "0002.jsonl", [_log_payload(i, 1) for i in range(12, 15)]
+    )
+    _relay(spark, root, ckpt, out_root, cfg)
+    second = _delivered(out_root)
+    assert sorted(second) == sorted(first + [f"log-line-1-{i}" for i in (12, 13, 14)])
+
+    # phase 3: crash between sink write and commit — replay exactly one epoch
+    _drop_last_commit(ckpt)
+    _relay(spark, root, ckpt, out_root, cfg)
+    third = _delivered(out_root)
     dups = sorted(third)
     for m in second:
         dups.remove(m)  # exactly the replayed epoch remains

@@ -4,29 +4,19 @@ write instead of dropping the record."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import time
 import uuid
+from pathlib import Path
 
 import pytest
+from conftest import new_stream, shard_records
 
 from pyspark.sql import functions as F
 
 from logspout_kinesis_tests_spark.config import EngineConfig
-from logspout_kinesis_tests_spark.streaming.sink import (
-    FileRecordingClient,
-    make_batch_writer,
-)
-
-
-def _delivered(out_dir: str) -> list[dict]:
-    records = []
-    for path in glob.glob(os.path.join(out_dir, "put-*.json")):
-        with open(path) as f:
-            records.extend(json.load(f)["records"])
-    return records
+from logspout_kinesis_tests_spark.streaming.pull_source import FileShardClient
+from logspout_kinesis_tests_spark.streaming.sink import make_batch_writer
 
 
 def _finished_job(tracker, group: str, timeout_s: float = 30.0):
@@ -45,7 +35,7 @@ def _finished_job(tracker, group: str, timeout_s: float = 30.0):
 
 def test_batch_writer_sends_each_partition_in_one_stage(spark, tmp_path):
     sc = spark.sparkContext
-    out_dir = str(tmp_path / "puts")
+    root = new_stream(str(tmp_path / "stream"))
     cfg = EngineConfig(docker_host="dh-test")
     df = spark.range(0, 30, 1, numPartitions=3).select(
         F.concat(F.lit("rec-"), F.col("id").cast("string")).alias("value"),
@@ -54,7 +44,7 @@ def test_batch_writer_sends_each_partition_in_one_stage(spark, tmp_path):
     group = f"sink-one-stage-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "make_batch_writer on 3 partitions")
     try:
-        make_batch_writer(lambda: FileRecordingClient(out_dir), cfg)(df, 0)
+        make_batch_writer(lambda: FileShardClient(root), cfg)(df, 0)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
@@ -65,27 +55,31 @@ def test_batch_writer_sends_each_partition_in_one_stage(spark, tmp_path):
     assert infos[0].status == "SUCCEEDED"
     assert len(infos[0].stageIds) == 1
     assert tracker.getStageInfo(infos[0].stageIds[0]).numTasks == 3
-    records = _delivered(out_dir)
-    assert sorted(r["data"] for r in records) == sorted(f"rec-{i}" for i in range(30))
+    # the three tasks published to one shard at once: every record landed,
+    # numbered densely
+    records = shard_records(root)["shard-000"]
+    assert [r["SequenceNumber"] for r in records] == list(range(30))
+    assert sorted(r["Data"] for r in records) == sorted(f"rec-{i}" for i in range(30))
     # A16: every record still keyed by docker_host
-    assert {r["partition_key"] for r in records} == {"dh-test"}
+    assert {r["PartitionKey"] for r in records} == {"dh-test"}
 
 
 def test_retry_exhaustion_fails_the_write_instead_of_dropping(spark, tmp_path):
-    out_dir = str(tmp_path / "puts")
+    root = new_stream(str(tmp_path / "stream"))
     offers_dir = str(tmp_path / "offers")
-    cfg = EngineConfig(docker_host="dh-test", max_attempts_per_record=3)
+    cfg = EngineConfig(stream_name="s1", docker_host="dh-test", max_attempts_per_record=3)
 
     # defined here so cloudpickle ships it by value to the Python workers
-    class RefuseOne(FileRecordingClient):
+    class RefuseOne(FileShardClient):
         """Refuses the record ``refused`` on every attempt, noting each offer
-        as a file; delivers the rest."""
+        and the stream it was sent to as a file; delivers the rest."""
 
         def put_records(self, stream_name, records):
             refused = [i for i, (data, _key) in enumerate(records) if data == "refused"]
             os.makedirs(offers_dir, exist_ok=True)
             for _ in refused:
-                open(os.path.join(offers_dir, uuid.uuid4().hex), "w").close()
+                with open(os.path.join(offers_dir, uuid.uuid4().hex), "w") as f:
+                    f.write(stream_name)
             super().put_records(
                 stream_name, [r for i, r in enumerate(records) if i not in refused]
             )
@@ -99,7 +93,9 @@ def test_retry_exhaustion_fails_the_write_instead_of_dropping(spark, tmp_path):
         F.lit(cfg.docker_host).alias("partition_key"),
     )
     with pytest.raises(Exception, match="failed after 3 attempts"):
-        make_batch_writer(lambda: RefuseOne(out_dir), cfg)(df, 0)
-    assert len(os.listdir(offers_dir)) == 3
-    delivered = sorted(r["data"] for r in _delivered(out_dir))
+        make_batch_writer(lambda: RefuseOne(root), cfg)(df, 0)
+    offers = [p.read_text() for p in Path(offers_dir).iterdir()]
+    # three offers, each to the configured stream
+    assert offers == ["s1"] * 3
+    delivered = sorted(r["Data"] for r in shard_records(root)["shard-000"])
     assert delivered == sorted(f"rec-{i}" for i in range(20) if i != 7)

@@ -1,24 +1,27 @@
 """Streaming tests (SURVEY.md §5.3): drip-feed batching, partition-key
-routing, bounded retry, checkpoint resume, console sink, listener stats.
-No AWS anywhere — the sink client is the file-recording fake."""
+routing, bounded retry, checkpoint resume, listener stats.  No AWS
+anywhere: the sink writes to a ``FileShardClient`` stream and the tests
+read it back through the pull source's ``get_records`` contract."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+from pathlib import Path
 
 import pytest
+from conftest import new_stream, shard_records
 
 from pyspark.sql import functions as F
 
 from logspout_kinesis_tests_spark.config import EngineConfig
 from logspout_kinesis_tests_spark.streaming.pipeline import (
     attach_stats_listener,
-    console_pipeline,
     produce_pipeline,
 )
-from logspout_kinesis_tests_spark.streaming.sink import FileRecordingClient
+from logspout_kinesis_tests_spark.streaming.pull_source import FileShardClient
+from logspout_kinesis_tests_spark.streaming.sink import ThrottlingClient
 
 
 @pytest.fixture()
@@ -40,35 +43,34 @@ def log_files(spark, tmp_path):
     return src_dir, [r.asDict() for r in collected]
 
 
-def _read_puts(out_dir: str) -> list[dict]:
-    calls = []
-    for path in sorted(glob.glob(os.path.join(out_dir, "put-*.json"))):
-        with open(path) as f:
-            calls.append(json.load(f))
-    return calls
+def _sent(root: str) -> list[dict]:
+    """The records of the one-shard stream at ``root``, in sequence order."""
+    return shard_records(root)["shard-000"]
 
 
 def test_drip_feed_batching_and_key_routing(spark, tmp_path, log_files):
     src_dir, rows = log_files
-    out_dir = str(tmp_path / "puts")
+    root = new_stream(str(tmp_path / "stream"))
     cfg = EngineConfig(stream_name="logbuffer-dev", docker_host="dh-test")
     listener = attach_stats_listener(spark)
     q = produce_pipeline(
         spark, src_dir, str(tmp_path / "ckpt"), cfg,
-        client_factory=lambda: FileRecordingClient(out_dir),
+        client_factory=lambda: FileShardClient(root),
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)
-    calls = _read_puts(out_dir)
-    records = [r for c in calls for r in c["records"]]
+    records = _sent(root)
     # every input exactly once (at-least-once upgraded by clean run)
-    assert len(records) == 30
-    msgs = [json.loads(r["data"]) for r in records]
+    assert [r["SequenceNumber"] for r in records] == list(range(30))
+    msgs = [json.loads(r["Data"]) for r in records]
     assert {m["message"] for m in msgs} == {r["data"] for r in rows}
     # A16: every record keyed by docker_host
-    assert {r["partition_key"] for r in records} == {"dh-test"}
-    # A15: no call exceeds the PutRecords cap
-    assert all(len(c["records"]) <= cfg.max_records_per_put for c in calls)
+    assert {r["PartitionKey"] for r in records} == {"dh-test"}
+    # A15: no call exceeds the PutRecords cap (one call, one file per shard)
+    puts = glob.glob(os.path.join(root, "shard-000", "*.jsonl"))
+    assert all(
+        len(Path(p).read_text().splitlines()) <= cfg.max_records_per_put for p in puts
+    )
     # A13: serialized JSON carries the v1 layout
     assert all("@timestamp" in m and "docker" in m for m in msgs)
     # A24: listener observed progress
@@ -78,32 +80,31 @@ def test_drip_feed_batching_and_key_routing(spark, tmp_path, log_files):
 
 def test_bounded_retry_delivers_failed_records(spark, tmp_path, log_files):
     src_dir, rows = log_files
-    out_dir = str(tmp_path / "puts")
+    root = new_stream(str(tmp_path / "stream"))
     cfg = EngineConfig(docker_host="dh-test")
     q = produce_pipeline(
         spark, src_dir, str(tmp_path / "ckpt"), cfg,
-        client_factory=lambda: FileRecordingClient(out_dir, fail_every=3),
+        client_factory=lambda: ThrottlingClient(FileShardClient(root), every=3),
         max_files_per_trigger=3,
     )
     q.awaitTermination(120)
-    records = [r for c in _read_puts(out_dir) for r in c["records"]]
+    records = _sent(root)
     # A17: failed records are retried and eventually delivered, exactly the
-    # full input set (fake fails each marked record once)
-    msgs = {json.loads(r["data"])["message"] for r in records}
+    # full input set (the wrapper fails each marked record once)
+    msgs = {json.loads(r["Data"])["message"] for r in records}
     assert msgs == {r["data"] for r in rows}
     assert len(records) == 30
 
 
 def test_checkpoint_resume_no_duplicates(spark, tmp_path, log_files):
     src_dir, rows = log_files
-    out_dir = str(tmp_path / "puts")
+    root = new_stream(str(tmp_path / "stream"))
     ckpt = str(tmp_path / "ckpt")
     cfg = EngineConfig(docker_host="dh-test")
-    factory = lambda: FileRecordingClient(out_dir)  # noqa: E731
+    factory = lambda: FileShardClient(root)  # noqa: E731
     q = produce_pipeline(spark, src_dir, ckpt, cfg, client_factory=factory)
     q.awaitTermination(120)
-    n_first = len([r for c in _read_puts(out_dir) for r in c["records"]])
-    assert n_first == 30
+    assert len(_sent(root)) == 30
 
     # drip one more file, restart from the same checkpoint (A3/A23)
     extra = [dict(r, data="late " + r["data"]) for r in rows[:5]]
@@ -114,11 +115,11 @@ def test_checkpoint_resume_no_duplicates(spark, tmp_path, log_files):
             f.write(json.dumps(d) + "\n")
     q2 = produce_pipeline(spark, src_dir, ckpt, cfg, client_factory=factory)
     q2.awaitTermination(120)
-    records = [r for c in _read_puts(out_dir) for r in c["records"]]
+    records = _sent(root)
     # only the 5 new records were sent on resume — offsets came from the
     # checkpoint, not a re-read of the directory
     assert len(records) == 35
-    late = [r for r in records if json.loads(r["data"])["message"].startswith("late ")]
+    late = [r for r in records if json.loads(r["Data"])["message"].startswith("late ")]
     assert len(late) == 5
 
 
@@ -149,14 +150,6 @@ def test_streaming_consumer_parse_and_quarantine(spark, tmp_path):
     assert ks == [1, 2, 3]  # garbage row quarantined, stream completed
 
 
-def test_console_sink_runs(spark, tmp_path, log_files):
-    src_dir, _rows = log_files
-    cfg = EngineConfig(docker_host="dh-test")
-    q = console_pipeline(spark, src_dir, str(tmp_path / "ckpt-console"), cfg)
-    q.awaitTermination(120)
-    assert not q.isActive  # drained and stopped (availableNow)
-
-
 def test_v0_layout_bytes_end_to_end(spark, tmp_path, log_files):
     """A12 through the STREAMING path: the bytes a v0-configured pipeline
     hands the sink are byte-identical to the batch transform's output (the
@@ -166,15 +159,15 @@ def test_v0_layout_bytes_end_to_end(spark, tmp_path, log_files):
     from logspout_kinesis_tests_spark.plans.etl_queries import synthetic_log_input
 
     src_dir, rows = log_files
-    out_dir = str(tmp_path / "puts")
+    root = new_stream(str(tmp_path / "stream"))
     cfg = EngineConfig(docker_host="dh-test", use_v0_layout=True)
     q = produce_pipeline(
         spark, src_dir, str(tmp_path / "ckpt"), cfg,
-        client_factory=lambda: FileRecordingClient(out_dir),
+        client_factory=lambda: FileShardClient(root),
         max_files_per_trigger=3,
     )
     q.awaitTermination(120)
-    sent = {r["data"] for c in _read_puts(out_dir) for r in c["records"]}
+    sent = {r["Data"] for r in _sent(root)}
     assert len(sent) == 30
     # golden byte-compare: the batch plan over the same 30 input rows
     batch_in = synthetic_log_input(spark, "/root/testdata/sf0.001").limit(30).drop("event_id")

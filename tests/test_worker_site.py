@@ -238,6 +238,7 @@ print(json.dumps({
     "jvm_pythonpath": spark._jvm.System.getenv("PYTHONPATH"),
     "before": before, "after": os.environ.get("PYTHONPATH"),
     "importers": importers, "pyspark": pyspark_file, "py4j": py4j_file, "added": added,
+    "zips": [f for f in os.listdir(os.environ["TMPDIR"]) if f.endswith(".zip")],
 }))
 spark.stop()
 """
@@ -248,9 +249,12 @@ def test_fresh_session_workers_drop_spark_archives(tmp_path):
     environment while the driver's is left as it was; a task holds no
     importer for an archive of Spark's that it does not import from (pyspark
     calls ``invalidate_caches`` on each one before every task), and a zip
-    added with ``addPyFile`` after a task still imports in the next one."""
+    added with ``addPyFile`` after a task still imports in the next one.
+    The package zip that the driver ships is gone once it exits."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
-    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g")
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g", TMPDIR=str(tmpdir))
     res = subprocess.run(
         [sys.executable, "-c", _FRESH_SESSION, str(tmp_path)], cwd=str(tmp_path),
         env=env, capture_output=True, text=True, timeout=300,
@@ -267,6 +271,10 @@ def test_fresh_session_workers_drop_spark_archives(tmp_path):
     if in_zip not in out["py4j"]:
         assert not [k for k in out["importers"] if os.path.basename(k).startswith("py4j-")]
     assert out["added"] == [7]
+    # the driver's package zip sat in its temp directory while it ran
+    assert len(out["zips"]) == 1
+    assert out["zips"][0].startswith("logspout_kinesis_tests_spark")
+    assert not list(tmpdir.glob("*.zip"))
 
 
 def test_workers_and_source_runner_import_installed_pyspark(spark, tmp_path):
