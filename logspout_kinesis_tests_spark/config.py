@@ -15,7 +15,8 @@ as the Go adapter ignores options it does not know:
 - ``add_blocks_when_buffer_full`` (logspoutkinesis.go:115-121) → Spark pulls
   micro-batches, so there is no buffer to overflow and no record to drop;
 - ``stat_interval`` (logspoutkinesis.go:155-161) → the query's progress
-  events (``pipeline.StatsListener``).
+  events (``query.recentProgress`` / ``lastProgress``, or a listener added
+  with ``spark.streams.addListener``).
 """
 
 from __future__ import annotations

@@ -13,14 +13,20 @@ At 100 TB the corpus is scanned once per iteration (2-3 iterations suffice
 for bucketing purposes — IVF needs balanced cells, not converged k-means),
 and the search-time join touches only nprobe cells per query.  The
 assignment table is the "index": persist it once, reuse across queries.
+An index that grows by arrival epoch (``codes/epoch=N``, ``vecs/epoch=N``)
+is folded by ``compact_ann_index``, one table at a time through
+``operators.dedup.compact_epoch_index``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from logspout_kinesis_tests_spark.functions.vectors import cosine_similarity
+from logspout_kinesis_tests_spark.operators.dedup import compact_epoch_index
 
 
 def _nearest_cell(
@@ -1036,3 +1042,72 @@ def ivf_assign(
         corpus_id,
         vec_col,
     )
+
+
+#: Epoch-partitioned tables of an ANN index, in fold order.  Anything else
+#: under the index dir (e.g. frozen codebooks, which are not
+#: epoch-partitioned) is left alone.
+_ANN_INDEX_TABLES = ("codes", "vecs")
+
+
+def compact_ann_index(
+    spark: SparkSession, index_dir: str, upto_epoch: int, count_rows: bool = True
+) -> dict[str, int]:
+    """Fold an epoch-partitioned ANN index's fragments (VERDICT r12 #6) —
+    the index analogue of the C19 small-file problem: every arrival epoch
+    adds ``codes/epoch=N`` (m ints/vector) and ``vecs/epoch=N`` (re-rank
+    precision), so a long-lived index accumulates thousands of small
+    fragments whose per-file open/footer cost eventually dominates
+    the probe scan.
+
+    Invariant: the fold preserves each table's exact row SET — both tables
+    are membership-shaped (one row per (id, sub) / per id; replay can only
+    duplicate whole rows, which ``distinct()`` collapses).  Search results
+    are therefore identical before/after up to floating-point summation
+    order: the exact re-rank cosine is a per-row fold (layout-free), and
+    ranking ties break on id, but the ADC candidate scores sum m partial
+    dots per pair in row-arrival order, so a re-layout can move a score by
+    an ulp and swap candidates exactly at the rerank cutoff.  Real
+    deployments keep rerank ≫ k, where an ulp-level cutoff swap cannot
+    reach the top-k; the parity row (c10_index_compaction_parity) goes
+    further and quantizes its vectors so every aggregated sum is exact and
+    order-independent, making result identity a strict invariant there.
+    ``tests/test_streaming_ann.py`` pins triple-identity (query,
+    neighbour, rank) plus quantized distances across the fold, including
+    a kill between the two table folds.
+
+    Crash contract (inherited per table from :func:`compact_epoch_index`'s
+    staged-swap recovery, extended across tables by ORDER): tables fold
+    one at a time, so a kill leaves at most one table mid-swap — that
+    table self-heals on the next call, the other is either fully pre- or
+    fully post-fold, and BOTH states serve identical ``epoch < N`` row
+    sets.  Re-running with the same ``upto_epoch`` is idempotent and
+    completes the remaining folds.  Same quiesce rule as the per-table op:
+    only fold epochs that can no longer replay (``upto_epoch <=`` last
+    committed epoch + 1).
+
+    Returns {table: rows_in_compacted_partition} for the tables present.
+    """
+    out: dict[str, int] = {}
+    for sub in _ANN_INDEX_TABLES:
+        path = os.path.join(index_dir, sub)
+        if not os.path.isdir(path):
+            continue
+        entries = os.listdir(path)
+        # Gate on a readable fold source: epoch= partitions, or a COMPLETED
+        # (_SUCCESS) staging dir whose swap compact_epoch_index can resume.
+        # A dir holding only an incomplete _compact_tmp_* must be skipped
+        # (ADVICE r13): compact_epoch_index would discard the stale tmp as
+        # crashed-mid-write and then fail reading the now-empty dir.  The
+        # incomplete tmp is left in place — it is Spark-invisible, and a
+        # later fold that finds real partitions beside it cleans it up.
+        foldable = any(n.startswith("epoch=") for n in entries) or any(
+            n.startswith("_compact_tmp_")
+            and os.path.exists(os.path.join(path, n, "_SUCCESS"))
+            for n in entries
+        )
+        if foldable:
+            out[sub] = compact_epoch_index(
+                spark, path, upto_epoch, count_rows=count_rows
+            )
+    return out

@@ -11,6 +11,11 @@ All variants are pure DataFrame compositions (no MLlib, no Python UDFs):
 - n-gram Jaccard       — exact set similarity with cheap blocking
 - embedding cosine     — near-dup by vector similarity with blocking
 
+``incremental_dedup`` probes a persisted content-hash index; kept
+epoch-partitioned (the streaming dedup flow's layout), that index is folded
+by ``compact_epoch_index``, which ``operators.ann.compact_ann_index`` applies
+per table of an ANN index.
+
 Scale design (100 TB): every variant reduces the O(n²) pair space *before*
 any shuffle — LSH bands, simhash chunks, or block keys — so the only joins
 are equi-joins on bucket keys that AQE can handle (and salt if a bucket key
@@ -20,7 +25,9 @@ the per-document cost is O(shingles × hashes) with no Python involved.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logspout_kinesis_tests_spark.functions.vectors import dot_product, l2_norm
@@ -924,6 +931,100 @@ def incremental_dedup(
     fresh = hashed.join(index.select("content_sha256"), "content_sha256", "left_anti")
     keep = fresh.groupBy("content_sha256").agg(F.min(id_col).alias(id_col)).select(id_col)
     return incoming.join(keep, id_col, "left_semi")
+
+
+def compact_epoch_index(
+    spark: SparkSession,
+    index_dir: str,
+    upto_epoch: int,
+    count_rows: bool = True,
+) -> int:
+    """Fold all index partitions with ``epoch < upto_epoch`` into the single
+    partition ``epoch = upto_epoch - 1`` — the periodic maintenance job the
+    epoch-partitioned streaming indexes assume at scale.
+
+    Correctness under the replay contract: probes read ``epoch < N`` for the
+    live epoch N.  Folding epochs ``0..upto_epoch-1`` into the partition id
+    ``upto_epoch - 1`` keeps every folded row visible to exactly the same
+    probes as before (any live epoch is ``>= upto_epoch``), and a replay of
+    epoch ``N >= upto_epoch`` still excludes its own write.  Only run with
+    ``upto_epoch <= `` the oldest epoch that could replay (i.e. the last
+    COMMITTED epoch + 1) — compacting the in-flight epoch would merge a
+    possibly-partial write.
+
+    The fold is a deduplicating ``distinct()``: every index kept in this
+    layout (content hashes, ANN codes and vecs) is membership-shaped, and
+    replayed epochs can leave identical rows in several partitions; after
+    compaction each surviving row exists once.
+
+    Returns the number of rows in the compacted partition (an extra read
+    job; pass ``count_rows=False`` to skip it and get ``-1`` when the
+    caller doesn't need the figure — e.g. a maintenance loop folding many
+    tables back-to-back).
+
+    Crash handling: the fold is staged under a Spark-hidden ``_compact_tmp``
+    dir first, so a crash BEFORE the swap leaves the index untouched.  The
+    swap itself (delete folded partitions, rename staging in) is not atomic
+    across a multi-dir filesystem — run compaction while the stream is
+    quiesced and RE-RUN IT after a crash: if a completed staging dir is
+    found the function resumes the swap instead of re-folding, restoring the
+    index before the stream restarts.  The resume is NOT keyed to calling
+    with the same ``upto_epoch``: any stale ``_compact_tmp_*`` dir from a
+    crashed run is handled on entry — a completed one (``_SUCCESS`` marker)
+    has its swap finished first (its folded rows may be the only copy of
+    already-deleted partitions; skipping it would silently lose them, since
+    underscore-prefixed dirs are invisible to Spark reads), an incomplete
+    one is discarded (its source partitions are all still present).
+    """
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    # Self-heal stale staging dirs from a prior crashed compaction BEFORE
+    # reading the index, so the refold below sees every surviving row.
+    for name in list(os.listdir(index_dir)):
+        if not name.startswith("_compact_tmp_"):
+            continue
+        stale_path = os.path.join(index_dir, name)
+        stale_epoch = int(name.rsplit("_", 1)[1])
+        if stale_epoch == upto_epoch - 1:
+            continue  # this run's own staging dir — resumed below
+        if os.path.exists(os.path.join(stale_path, "_SUCCESS")):
+            # Finish the interrupted swap for its ORIGINAL epoch: delete
+            # whatever folded partitions remain, promote the staging dir.
+            for n2 in os.listdir(index_dir):
+                if n2.startswith("epoch="):
+                    try:
+                        if int(n2.split("=", 1)[1]) <= stale_epoch:
+                            shutil.rmtree(os.path.join(index_dir, n2))
+                    except ValueError:
+                        continue
+            os.rename(stale_path, os.path.join(index_dir, f"epoch={stale_epoch}"))
+        else:
+            # Fold crashed mid-write: all source partitions still exist,
+            # the staging dir holds nothing unique — drop it.
+            shutil.rmtree(stale_path)
+
+    tmp = os.path.join(index_dir, f"_compact_tmp_{upto_epoch - 1}")
+    staged = os.path.exists(os.path.join(tmp, "_SUCCESS"))
+    if not staged:
+        idx = spark.read.parquet(index_dir)
+        cols = [c for c in idx.columns if c != "epoch"]
+        folded = idx.filter(F.col("epoch") < upto_epoch).select(*cols).distinct()
+        folded.write.mode("overwrite").parquet(tmp)
+    for name in os.listdir(index_dir):
+        if name.startswith("epoch="):
+            try:
+                if int(name.split("=", 1)[1]) < upto_epoch:
+                    shutil.rmtree(os.path.join(index_dir, name))
+            except ValueError:
+                continue
+    os.rename(tmp, os.path.join(index_dir, f"epoch={upto_epoch - 1}"))
+    if not count_rows:
+        return -1
+    return spark.read.parquet(
+        os.path.join(index_dir, f"epoch={upto_epoch - 1}")
+    ).count()
 
 
 def line_dedup(

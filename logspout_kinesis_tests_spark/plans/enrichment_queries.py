@@ -175,7 +175,7 @@ _COMPACT_TARGET = 500
     "exclusive running sum: group = floor(cum_before / target).  One "
     "shuffle on the partition key, O(1) window state per file; the plan "
     "table is |files|, never |rows|, so the planner costs nothing at "
-    "scale.  Mirrors the epoch-compaction fold in streaming/batch_apply "
+    "scale.  Mirrors the epoch-compaction fold in operators/dedup.py "
     "as a batch, oracle-verifiable shape.",
 )
 def c19_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

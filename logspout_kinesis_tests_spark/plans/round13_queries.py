@@ -71,7 +71,7 @@ def _cmp_oracle() -> str:
     "epoch-partitioned PQ index on disk (codes/epoch=N + vecs/epoch=N per "
     "arrival epoch, codebooks trained once on epoch 0), folds a copy of "
     "every epoch fragment with compact_ann_index "
-    "(streaming/batch_apply.py), then searches a "
+    "(operators/ann.py), then searches a "
     "frozen panel against the fragmented and the folded index as "
     "parallel subplans of ONE action, emitting the invariant as gates: "
     "result triples (query, neighbour, rank) and quantized re-rank "
@@ -84,12 +84,10 @@ def _cmp_oracle() -> str:
 )
 def c10_index_compaction_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logspout_kinesis_tests_spark.operators.ann import (
+        compact_ann_index,
         pq_encode,
         pq_index,
         pq_topk,
-    )
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_ann_index,
     )
 
     emb = (

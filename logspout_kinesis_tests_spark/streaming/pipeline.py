@@ -12,6 +12,12 @@ readstream.py:19-38) collapses into Structured Streaming source mechanics:
 source partitions ↔ shards, checkpoint offsets ↔ sequence numbers, trigger
 pacing ↔ poll sleep — all read in parallel tasks instead of one time-sliced
 thread.
+
+The reference's StatInterval logger (A24, logspoutkinesis.go:155-161) is the
+progress event Spark records for every trigger: read it from the returned
+query's ``recentProgress`` / ``lastProgress`` (the last
+``spark.sql.streaming.numRecentProgressUpdates`` events, 100 by default), or
+subscribe a ``StreamingQueryListener`` with ``spark.streams.addListener``.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 from logspout_kinesis_tests_spark.config import EngineConfig
 from logspout_kinesis_tests_spark.operators.etl import logstash_message, serialize_json
@@ -113,37 +119,3 @@ def consume_pipeline(
         .start()
     )
 
-
-class StatsListener(StreamingQueryListener):
-    """A24: periodic throughput stats — the reference's StatInterval logger
-    (logspoutkinesis.go:155-161) is built into Structured Streaming's
-    progress events; this listener surfaces them."""
-
-    def __init__(self):
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event):  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event):  # noqa: N802
-        p = event.progress
-        self.progress.append(
-            {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "input_rows_per_second": p.inputRowsPerSecond,
-                "processed_rows_per_second": p.processedRowsPerSecond,
-            }
-        )
-
-    def onQueryTerminated(self, event):  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event):  # noqa: N802
-        pass
-
-
-def attach_stats_listener(spark: SparkSession) -> StatsListener:
-    listener = StatsListener()
-    spark.streams.addListener(listener)
-    return listener

@@ -535,18 +535,23 @@ class RecordPullDataSource(DataSource):
 
 
 def register_pull_source(spark: SparkSession) -> None:
-    """Register the source (idempotent) and ship the package to executors.
+    """Register the source once per session and ship the package to
+    executors.
 
     Registers this module for cloudpickle by-value serialization first, so
     the pickled DataSource class and client factories are self-contained —
     the driver-side planner worker that unpickles them does not receive
-    ``addPyFile`` includes.
+    ``addPyFile`` includes.  The session's own data-source manager says
+    whether ``record_pull`` is there already; registering it again would
+    pickle the class anew and replace the entry.
     """
     from logspout_kinesis_tests_spark.session import ensure_runtime_confs
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     ensure_runtime_confs(spark)
-    spark.dataSource.register(RecordPullDataSource)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(RecordPullDataSource.name()):
+        spark.dataSource.register(RecordPullDataSource)
 
 
 def pull_stream(

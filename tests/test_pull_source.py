@@ -306,6 +306,24 @@ def test_throttling_client_fails_each_marked_record_once(tmp_path):
     ] + ["m-2", "m-5"]
 
 
+def test_pull_stream_registers_the_source_once_per_session(spark, shard_root, monkeypatch):
+    """A session registers ``record_pull`` on its first pull stream only:
+    registering again pickles the source anew and replaces the entry."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    pull_stream(spark, CLIENT, {"root": shard_root})
+    registered = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, source: registered.append(source) or register(self, source),
+    )
+    for _ in range(2):
+        pull_stream(spark, CLIENT, {"root": shard_root})
+    assert registered == []
+
+
 def test_consume_pipeline_runs(spark, tmp_path, shard_root):
     from logspout_kinesis_tests_spark.streaming.pipeline import consume_pipeline
 

@@ -8,7 +8,11 @@ Here that stream is one ``FileShardClient`` directory: the sink's
     produce_pipeline (A7-A17) → shard files → pull_stream (A2-A5)
       → parse_consumed (A14) → quarantine_split (A19)
 
-under throttling and under a replayed producer epoch.
+under throttling, a replayed producer epoch, a put that fails after
+publishing half its records, and a record that runs out of attempts.  Where
+a fault leaves duplicates, the consumed records then run through
+``streaming_incremental_dedup`` (C8), which must leave each produced message
+exactly once: at-least-once delivery plus replay-safe dedup.
 
 ``test_pull_to_sink_relay`` runs the pull consumer feeding the producer's
 transform and sink as ONE checkpointed streaming query:
@@ -35,9 +39,12 @@ import os
 import pytest
 from conftest import new_stream, shard_records
 
+from pyspark.errors import StreamingQueryException
+
 from logspout_kinesis_tests_spark.config import EngineConfig
 from logspout_kinesis_tests_spark.operators.etl import parse_consumed, quarantine_split
 from logspout_kinesis_tests_spark.schemas import LOG_INPUT, LOGSTASH_V1
+from logspout_kinesis_tests_spark.streaming.batch_apply import streaming_incremental_dedup
 from logspout_kinesis_tests_spark.streaming.pipeline import produce_pipeline, transform
 from logspout_kinesis_tests_spark.streaming.pull_source import FileShardClient, pull_stream
 from logspout_kinesis_tests_spark.streaming.sink import ThrottlingClient, make_batch_writer
@@ -138,21 +145,89 @@ def _consume(spark, root: str, ckpt: str) -> tuple[list[dict], int]:
     return good_rows, quarantined[0]
 
 
-@pytest.mark.parametrize("fault", ["throttled", "replayed"])
+def _dedup(spark, good: list[dict], tmp_path) -> tuple[list[dict], dict[str, int]]:
+    """Run the consumed records through ``streaming_incremental_dedup``, one
+    3-record file per epoch in shard-and-sequence order: the survivors, and
+    each message's first copy's id.  The id is made from (shard, sequence
+    number), so it is the same on every replay of the consumer."""
+    docs = sorted(
+        (int(r["shard_id"].rsplit("-", 1)[1]) * 1_000_000 + r["sequence_number"],
+         r["message"])
+        for r in good
+    )
+    src = tmp_path / "dedup-src"
+    src.mkdir()
+    first: dict[str, int] = {}
+    first_epoch: dict[str, int] = {}
+    for n, (doc_id, text) in enumerate(docs):
+        first.setdefault(text, doc_id)
+        first_epoch.setdefault(text, n // 3)
+    # some copy lands in a later epoch than its original, so the index, not
+    # only the in-batch min, has to drop it
+    assert any(n // 3 > first_epoch[text] for n, (_, text) in enumerate(docs))
+    for f in range(0, len(docs), 3):
+        path = src / f"{f:03d}.json"
+        path.write_text(
+            "".join(json.dumps({"doc_id": i, "text": t}) + "\n" for i, t in docs[f : f + 3])
+        )
+        os.utime(path, (1_700_000_000 + f * 60, 1_700_000_000 + f * 60))
+    out = tmp_path / "dedup-out"
+    streaming_incremental_dedup(
+        spark, str(src), str(tmp_path / "dedup-ckpt"), "doc_id long, text string",
+        str(tmp_path / "dedup-index"), str(out), max_files_per_trigger=1,
+    ).awaitTermination(300)
+    survivors = [
+        json.loads(line)
+        for p in out.glob("epoch=*/part-*.json")
+        for line in p.read_text().splitlines()
+    ]
+    return survivors, first
+
+
+#: the messages of host 0's last producer epoch that each fault delivers
+#: twice: a replay resends all four; a put that fails after publishing half
+#: resends that half; exhausted retries resend what the throttle let through
+#: (it refuses every 2nd record of a call)
+REDELIVERED = {
+    "throttled": [],
+    "replayed": [8, 9, 10, 11],
+    "partial_put": [8, 9],
+    "exhausted": [8, 10],
+}
+
+
+@pytest.mark.parametrize("fault", list(REDELIVERED))
 def test_produce_consume_round_trip(spark, tmp_path, fault):
-    """What the producer puts is what the consumer reads: under throttling,
-    every record exactly once; after a replayed producer epoch, that
-    epoch's records twice and nothing lost."""
+    """What the producer puts is what the consumer reads, and what survives
+    dedup is what was produced.  Under throttling every record arrives
+    once.  After a replayed producer epoch, a put that fails halfway, or a
+    record that runs out of attempts, the failed epoch is rerun from the
+    checkpoint: its records may come twice, and nothing is lost.  Dedup
+    then leaves each produced message exactly once, as its first copy."""
     root = new_stream(str(tmp_path / "stream"), shards=2)
+    marks = str(tmp_path / "marks")
+
+    # defined here so cloudpickle ships it by value to the Python workers
+    class PartialPut(FileShardClient):
+        """Publishes the first half of its first offer, then fails; passes
+        every later offer through."""
+
+        def put_records(self, stream_name, records):
+            try:
+                os.makedirs(marks)
+            except FileExistsError:
+                return super().put_records(stream_name, records)
+            super().put_records(stream_name, records[: len(records) // 2])
+            raise RuntimeError("put failed after publishing half its records")
+
+    def throttled():
+        return ThrottlingClient(FileShardClient(root), every=2)
+
     produced: list[str] = []
-    replayed: list[str] = []
+    errors: list[str] = []
     for h, host in enumerate(HOSTS):
         cfg = EngineConfig(stream_name="logbuffer-dev", docker_host=host)
-        factory = (
-            (lambda: ThrottlingClient(FileShardClient(root), every=2))
-            if fault == "throttled"
-            else (lambda: FileShardClient(root))
-        )
+        factory = throttled if fault == "throttled" else (lambda: FileShardClient(root))
         src, ckpt = str(tmp_path / f"src-{h}"), str(tmp_path / f"produce-{h}")
         os.makedirs(src)
         # one file per run, so the last run's epoch holds exactly the last
@@ -161,12 +236,26 @@ def test_produce_consume_round_trip(spark, tmp_path, fault):
             with open(os.path.join(src, f"{k}.json"), "w") as f:
                 for i in range(4 * k, 4 * k + 4):
                     f.write(_log_payload(i, h) + "\n")
+            if h == 0 and k == 2 and fault in ("partial_put", "exhausted"):
+                if fault == "partial_put":
+                    factory = lambda: PartialPut(root)  # noqa: E731
+                else:
+                    cfg = EngineConfig(
+                        stream_name="logbuffer-dev", docker_host=host,
+                        max_attempts_per_record=1,
+                    )
+                    factory = throttled
+                # local mode gives each task one attempt: the run fails, and
+                # the rerun below replays its epoch from the checkpoint
+                try:
+                    produce_pipeline(spark, src, ckpt, cfg, factory).awaitTermination(120)
+                except StreamingQueryException as exc:
+                    errors.append(str(exc))
             produce_pipeline(spark, src, ckpt, cfg, factory).awaitTermination(120)
         produced += [f"log-line-{h}-{i}" for i in range(12)]
         if fault == "replayed" and h == 0:
             _drop_last_commit(ckpt)
             produce_pipeline(spark, src, ckpt, cfg, factory).awaitTermination(120)
-            replayed = [f"log-line-0-{i}" for i in range(8, 12)]
 
     stored = shard_records(root)
     assert {s: {r["PartitionKey"] for r in rs} for s, rs in stored.items()} == {
@@ -178,9 +267,23 @@ def test_produce_consume_round_trip(spark, tmp_path, fault):
         assert sorted(r["sequence_number"] for r in good if r["shard_id"] == shard) == (
             list(range(len(records)))
         )
-    # at least once: a replayed epoch comes back as duplicates of exactly
-    # its own records, never as a loss
-    assert sorted(r["message"] for r in good) == sorted(produced + replayed)
+    # at least once: a failed epoch comes back as duplicates of its own
+    # records only, never as a loss
+    redelivered = [f"log-line-0-{i}" for i in REDELIVERED[fault]]
+    assert sorted(r["message"] for r in good) == sorted(produced + redelivered)
+    # checked after the delivery, so that a sink that swallows the error
+    # shows as the records it loses
+    expected_error = {
+        "partial_put": "put failed after publishing half its records",
+        "exhausted": "2 records failed after 1 attempts",
+    }.get(fault)
+    assert [expected_error in e for e in errors] == ([True] if expected_error else [])
+    if redelivered:
+        # exactly once after dedup: every produced message, once, as the
+        # copy with the lowest (shard, sequence number)
+        survivors, first = _dedup(spark, good, tmp_path)
+        assert sorted(s["text"] for s in survivors) == sorted(produced)
+        assert {s["text"]: s["doc_id"] for s in survivors} == first
 
 
 def test_pull_to_sink_relay(spark, tmp_path):

@@ -28,14 +28,12 @@ def test_compact_ann_index_kill_between_table_folds(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from logspout_kinesis_tests_spark.operators.ann import (
+        compact_ann_index,
         pq_encode,
         pq_index,
         pq_topk,
     )
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_ann_index,
-        compact_epoch_index,
-    )
+    from logspout_kinesis_tests_spark.operators.dedup import compact_epoch_index
 
     index = str(tmp_path / "idx")
     emb = spark.createDataFrame(
@@ -103,9 +101,10 @@ def test_compact_ann_index_resumes_mid_swap_kill(spark, tmp_path):
     compact_ann_index call — the staged rows are the only copy."""
     from pyspark.sql import functions as F
 
-    from logspout_kinesis_tests_spark.operators.ann import pq_encode, pq_index
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
+    from logspout_kinesis_tests_spark.operators.ann import (
         compact_ann_index,
+        pq_encode,
+        pq_index,
     )
 
     index = str(tmp_path / "idx")
@@ -146,9 +145,10 @@ def test_compact_ann_index_skips_incomplete_tmp_only_dir(spark, tmp_path):
     dir raised AnalysisException.  The healthy sibling table still folds."""
     from pyspark.sql import functions as F
 
-    from logspout_kinesis_tests_spark.operators.ann import pq_encode, pq_index
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
+    from logspout_kinesis_tests_spark.operators.ann import (
         compact_ann_index,
+        pq_encode,
+        pq_index,
     )
 
     index = str(tmp_path / "idx")

@@ -129,9 +129,9 @@ def test_compact_epoch_index_preserves_dedup_state(spark, sf_dir, tmp_path):
     """Folding committed epochs into one partition must leave the probe's
     view identical: a post-compaction batch still dedups against everything
     the pre-compaction index knew."""
+    from logspout_kinesis_tests_spark.operators.dedup import compact_epoch_index
     from logspout_kinesis_tests_spark.sources.tables import load_table
     from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_epoch_index,
         streaming_incremental_dedup,
     )
 
@@ -185,9 +185,7 @@ def test_compact_epoch_index_preserves_dedup_state(spark, sf_dir, tmp_path):
 def test_compact_epoch_index_resumes_staged_swap(spark, tmp_path):
     """A compaction crashed after staging must resume the swap on re-run —
     the staged fold (not a fresh one) becomes the compacted partition."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_epoch_index,
-    )
+    from logspout_kinesis_tests_spark.operators.dedup import compact_epoch_index
 
     index = str(tmp_path / "index")
     for epoch, vals in enumerate([["a", "b"], ["c"]]):
@@ -212,9 +210,7 @@ def test_compact_epoch_index_recovers_stale_staged_swap(spark, tmp_path):
     their partitions already deleted when the crash hit, so the staging dir
     holds the ONLY copy of those rows (and, underscore-hidden, is invisible
     to the refold).  The stale swap must be finished before the new fold."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_epoch_index,
-    )
+    from logspout_kinesis_tests_spark.operators.dedup import compact_epoch_index
 
     index = str(tmp_path / "index")
     # surviving partition: epoch=2 only (epochs 0-1 deleted mid-swap)
@@ -236,9 +232,7 @@ def test_compact_epoch_index_recovers_stale_staged_swap(spark, tmp_path):
 def test_compact_epoch_index_discards_incomplete_staging(spark, tmp_path):
     """An INCOMPLETE stale staging dir (no _SUCCESS — the fold itself
     crashed) holds nothing unique; it must be dropped, not promoted."""
-    from logspout_kinesis_tests_spark.streaming.batch_apply import (
-        compact_epoch_index,
-    )
+    from logspout_kinesis_tests_spark.operators.dedup import compact_epoch_index
 
     index = str(tmp_path / "index")
     for epoch, vals in enumerate([["a", "b"], ["c"]]):
